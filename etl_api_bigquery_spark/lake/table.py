@@ -45,6 +45,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -165,6 +166,7 @@ class LakeTable:
         # props of the pending commit, visible to last_txn before it lands
         self._commit_pool = None
         self._commit_future = None
+        self._commit_lock = threading.Lock()
         self._pending_txn: tuple[str, int] | None = None
 
     # ------------------------------------------------------------------ DDL
@@ -479,22 +481,20 @@ class LakeTable:
 
     # ----------------------------------------------------------------- reads
 
-    def _read_entries(self, snap: Snapshot, entries: list[FileEntry],
-                      kind: str) -> DataFrame:
-        """Read one kind of files, grouped by schema_id so old files are read
-        with the schema they were written with, then cast/padded to the
-        current one (safe widening reads)."""
-        cur_schema = _schema_with_engine_cols(snap.schema, kind)
-        sel = [e for e in entries if e.kind == kind]
-        if not sel:
+    def _scan(self, snap: Snapshot, entries: list[FileEntry]) -> DataFrame:
+        """Spark parquet scan of base files, grouped by schema_id so old files
+        are read with the schema they were written with, then cast/padded to
+        the current one (safe widening reads)."""
+        cur_schema = _schema_with_engine_cols(snap.schema)
+        if not entries:
             return self.spark.createDataFrame([], cur_schema)
         by_sid: dict[int, list[str]] = {}
-        for e in sel:
+        for e in entries:
             by_sid.setdefault(e.schema_id, []).append(
                 os.path.join(self.location, e.path))
         parts: list[DataFrame] = []
         for sid, paths in sorted(by_sid.items()):
-            written = _schema_with_engine_cols(snap.schemas[sid], kind)
+            written = _schema_with_engine_cols(snap.schemas[sid])
             part = self.spark.read.schema(written).parquet(*paths)
             parts.append(_conform(part, cur_schema))
         df = parts[0]
@@ -533,54 +533,66 @@ class LakeTable:
         """Snapshot read. ``buckets`` prunes to the given bucket ids using the
         manifest (no file even opened for pruned buckets).
 
-        Merge-on-read resolution: if the selected snapshot contains delta
-        files (written by ``merge_cdc_batch(mode="mor")``), base and delta
-        rows are unioned and collapsed per key to the max-LSN row, dropping
-        delete tombstones — the same LWW rule the COW merge applies at write
-        time. Compaction (:meth:`compact_deltas`) bounds the number of deltas
-        so read amplification stays O(1) per bucket."""
+        A snapshot whose selected files include delta (L0) files is resolved
+        bucket-locally by :func:`_lww_kernel`: per key the max
+        ``(_lsn, coalesce(_op, 'U'))`` row wins, with no shuffle and no Spark
+        file listing. Without delta files the read is a plain Spark parquet
+        scan. ``with_bucket=True`` returns the engine columns and keeps
+        delete tombstones (rewrites and folds need both); a public read hides
+        them."""
         self.join_pending_commit()        # read-your-writes under async commit
         snap = self.snapshot(version)
         entries = snap.files_for_buckets(buckets)
-        if skip_predicates:
-            # NOTE: stats skipping is only sound when no delta files overlap
-            # the pruned set (a delta could revive/delete a key outside the
-            # base file's range); enforced here.
-            if any(e.kind == "delta" for e in entries):
+        if any(e.kind == "delta" for e in entries):
+            if skip_predicates:
+                # stats skipping is unsound over deltas: a delta can revive
+                # or delete a key outside the base file's range
                 raise ValueError("skip_predicates requires compacted buckets "
                                  "(run compact_deltas first)")
+            return self._read_lww(snap, entries, buckets, with_bucket)
+        if skip_predicates:
             entries = self.prune_files(entries, skip_predicates)
-        base = self._read_entries(snap, entries, "base")
-        has_delta = any(e.kind == "delta" for e in entries)
-        if not has_delta:
-            df = base
-        else:
-            delta = self._read_entries(snap, entries, "delta")
-            df = self._resolve_lww(base.unionByName(delta))
+        df = self._scan(snap, entries)
         if not with_bucket:
             # public read: hide tombstones and engine columns
             df = (df.filter(F.coalesce(F.col(OP_COL), F.lit("U")) != "D")
                   .drop(BUCKET_COL, LSN_COL, OP_COL))
         return df
 
-    def _resolve_lww(self, unioned: DataFrame,
-                     drop_tombstones: bool = False) -> DataFrame:
-        """Collapse base+delta rows to the max-LSN row per key. Winning D
-        rows are KEPT as tombstones (public reads filter them; they guard
-        against resurrection by out-of-order older events). NULL keys group
-        via the same coalesce rule as bucketing."""
-        from pyspark.sql import Window
+    def _read_lww(self, snap: Snapshot, entries: list[FileEntry],
+                  buckets: Iterable[int] | None,
+                  with_bucket: bool) -> DataFrame:
+        """Plan :func:`_lww_kernel` over ``entries``: the selected buckets
+        are split into ``min(#buckets, defaultParallelism)`` contiguous
+        ranges, one task each. Files are assigned from the manifest: a
+        bucket-pure file to the range holding its bucket, a mixed file to
+        every range its footer ``_bucket`` span overlaps."""
+        from functools import partial
 
-        keys = self.key_cols
-        w = Window.partitionBy(*[
-            F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in keys
-        ]).orderBy(F.col(LSN_COL).desc(),
-                   F.coalesce(F.col(OP_COL), F.lit("U")).desc())
-        out = (unioned.withColumn("_rn", F.row_number().over(w))
-               .filter(F.col("_rn") == 1).drop("_rn"))
-        if drop_tombstones:
-            out = out.filter(F.coalesce(F.col(OP_COL), F.lit("U")) != "D")
-        return out
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        nb = int(snap.table_meta["num_buckets"])
+        want = sorted(set(buckets)) if buckets is not None else list(range(nb))
+        n = max(1, min(len(want),
+                       self.spark.sparkContext.defaultParallelism))
+        ranges: list[tuple[list[int], list[tuple[str, bool]]]] = [
+            (want[i * len(want) // n:(i + 1) * len(want) // n], [])
+            for i in range(n)]
+        for e in entries:
+            mixed = e.bucket == MIXED_BUCKET
+            lo, hi = (self._entry_bucket_range(e) if mixed
+                      else (e.bucket, e.bucket))
+            path = os.path.join(self.location, e.path)
+            for rb, files in ranges:
+                if rb[0] <= hi and lo <= rb[-1]:
+                    files.append((path, mixed))
+        full = _schema_with_engine_cols(snap.schema)
+        kernel = partial(_lww_kernel, ranges=ranges,
+                         target=to_arrow_schema(full),
+                         key_cols=list(snap.table_meta["key_cols"]),
+                         with_bucket=with_bucket)
+        return self.spark.range(n, numPartitions=n).mapInArrow(
+            kernel, full if with_bucket else snap.schema)
 
     def expire_tombstones(self, below_lsn: int,
                           properties: dict[str, Any] | None = None) -> int:
@@ -882,10 +894,11 @@ class LakeTable:
                       props_fn: Any = None,
                       async_finalize: bool = False,
                       post_commit: Any = None) -> int:
-        """Merge-on-read write path: append LWW-resolvable change files
-        (rows carry BUCKET_COL, LSN_COL, OP_COL). O(batch) cost — no target
-        read, no rewrite; reads resolve via :meth:`_resolve_lww` and
-        :meth:`compact_deltas` folds deltas into base files. Pass
+        """Delta (L0) write path of the raw and mor merge modes: append
+        LWW-resolvable change files (rows carry BUCKET_COL, LSN_COL,
+        OP_COL). O(batch) cost — no target read, no rewrite; reads resolve
+        them bucket-locally (:func:`_lww_kernel`) and :meth:`compact_deltas`
+        folds them into base files. Pass
         ``repartition=False`` when df is already bucket-partitioned (the
         merge path) to skip the extra shuffle.
 
@@ -953,7 +966,7 @@ class LakeTable:
             self._pending_txn = (str(props0["txn_app"]),
                                  int(props0["txn_batch"]))
 
-        def _finalize() -> int:
+        def _commit() -> int:
             _th = time.monotonic()
             entries = self._harvest_entries(abs_dir, rel_dir,
                                             snap.schema_id, "delta")
@@ -969,13 +982,19 @@ class LakeTable:
             v = version
             while True:
                 try:
-                    v = self._write_commit(v, "merge_mor", snap.schema,
-                                           snap.schema_id, entries, [], props)
-                    break
+                    return self._write_commit(v, "merge_mor", snap.schema,
+                                              snap.schema_id, entries, [],
+                                              props)
                 except CommitConflictError:
                     v = self.snapshot().version + 1
-            # commit is durable: the log itself now carries the fence
-            self._pending_txn = None
+
+        def _finalize() -> int:
+            try:
+                v = _commit()
+            finally:
+                # committed: the log itself now carries the fence; failed:
+                # the batch is lost and must not stay fenced
+                self._pending_txn = None
             if post_commit is not None:
                 post_commit(v)
             return v
@@ -984,7 +1003,8 @@ class LakeTable:
             from concurrent.futures import ThreadPoolExecutor
             self._commit_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="lake-commit")
-        self._commit_future = self._commit_pool.submit(_finalize)
+        with self._commit_lock:
+            self._commit_future = self._commit_pool.submit(_finalize)
         return -1
 
     def join_pending_commit(self) -> int | None:
@@ -996,13 +1016,16 @@ class LakeTable:
         f = self._commit_future
         if f is None:
             return None
-        import threading
         if threading.current_thread().name.startswith("lake-commit"):
             return None
         try:
             return f.result()
         finally:
-            self._commit_future = None
+            # compare-and-clear: a maintenance thread that waited on this
+            # finalizer must not drop the next batch's
+            with self._commit_lock:
+                if self._commit_future is f:
+                    self._commit_future = None
 
     # ------------------------------------------------------- maintenance
 
@@ -1120,8 +1143,9 @@ class LakeTable:
                        record_phases: bool = True) -> int | None:
         """Fold delta files into base files for buckets whose delta count
         reached ``max_delta_files`` (or an explicit bucket list). Content
-        preserving: resolved LWW state is rewritten as base; tombstones
-        physically disappear. The MOR analogue of Iceberg rewrite_data_files /
+        preserving: the state :meth:`read` resolves (``with_bucket=True``,
+        so winning tombstones are kept and keep guarding their keys) is
+        rewritten as base files. The analogue of Iceberg rewrite_data_files /
         Hudi compaction.
 
         Raw-append (mixed-bucket) delta files span buckets, so removing one
@@ -1153,8 +1177,12 @@ class LakeTable:
                              with_bucket=True)
         props = dict(properties or {})
         props["compacted_delta_buckets"] = sorted(targets) if targets else "all"
+        # an L0 read is already split by bucket range, one task per range:
+        # writing it as-is gives one file per bucket with no exchange
+        l0 = any(e.kind == "delta" for e in victims)
         return self.commit_rewrite(resolved, victims, "compact_deltas",
                                    snap.schema, snap.schema_id, props,
+                                   repartition=not l0,
                                    record_phases=record_phases,
                                    retry_conflicts=True)
 
@@ -1174,19 +1202,23 @@ class LakeTable:
                 properties: dict[str, Any] | None = None) -> int | None:
         """Rewrite buckets fragmented across many files into one file each
         (reference analogue: single-file-per-partition compaction,
-        gcs/loader.py:173-224; Iceberg rewrite_data_files)."""
+        gcs/loader.py:173-224; Iceberg rewrite_data_files). A mixed file
+        counts toward every bucket of its span, and the rewrite covers the
+        closure of those spans (:meth:`expand_bucket_closure`)."""
         self.join_pending_commit()
         snap = self.snapshot()
-        by_bucket: dict[int, list[FileEntry]] = {}
+        counts: dict[int, int] = {}
         for e in snap.files.values():
-            by_bucket.setdefault(e.bucket, []).append(e)
-        frag = {b: es for b, es in by_bucket.items() if len(es) >= min_files_per_bucket}
+            for b in self.buckets_of_entries([e]):
+                counts[b] = counts.get(b, 0) + 1
+        frag = [b for b, c in counts.items() if c >= min_files_per_bucket]
         if not frag:
             return None
-        victims = [e for es in frag.values() for e in es]
-        df = self.read(buckets=list(frag.keys()), with_bucket=True)
+        targets = self.expand_bucket_closure(snap, frag)
+        victims = snap.files_for_buckets(targets)
+        df = self.read(buckets=targets, with_bucket=True)
         props = dict(properties or {})
-        props["compacted_buckets"] = sorted(frag.keys())
+        props["compacted_buckets"] = targets if targets is not None else "all"
         return self.commit_rewrite(df, victims, "compact", snap.schema,
                                    snap.schema_id, props)
 
@@ -1249,6 +1281,91 @@ def _harvest_footer(fp: str, abs_dir: str, rel_dir: str, schema_id: int,
     rel = os.path.join(rel_dir, os.path.relpath(fp, abs_dir))
     return FileEntry(rel, bucket, md.num_rows, os.path.getsize(fp),
                      schema_id, stats, kind).to_json()
+
+
+def _lww_kernel(batches, ranges: list[tuple[list[int], list[tuple[str, bool]]]],
+                target, key_cols: list[str], with_bucket: bool):
+    """``mapInArrow`` body of an L0 read: each input row is a range index;
+    the task reads that range's files with pyarrow, conforms each to the
+    snapshot schema ``target`` (missing column -> NULL, narrower type
+    widened, the :func:`_conform` rule) and keeps per key the max
+    ``(_lsn, coalesce(_op, 'U'))`` row. Keys group by the
+    NULL -> ``"\\x00null"`` string rule of ``bucket_expr``. Winning ``D``
+    rows are kept as tombstones for ``with_bucket=True`` (they guard against
+    resurrection by out-of-order older events); otherwise they and the
+    engine columns are dropped.
+
+    A mixed (multi-bucket) file is read once per range its ``_bucket`` span
+    overlaps and filtered to that range's buckets. That re-read happens
+    only at small per-task volumes, where ``_l0_groups_for`` already gives
+    up bucket purity. Module-level so it pickles by reference into executor
+    tasks, like :func:`_harvest_footer`."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for batch in batches:
+        for i in batch.column(0).to_pylist():
+            rb, files = ranges[i]
+            parts = []
+            for path, mixed in files:
+                t = pq.ParquetFile(path, coerce_int96_timestamp_unit="us"
+                                   ).read(use_threads=False)
+                if mixed:
+                    t = t.filter(pc.is_in(t[BUCKET_COL],
+                                          value_set=pa.array(rb, pa.int32())))
+                parts.append(_conform_arrow(t, target))
+            if not parts:
+                continue
+            out = _lww_winners(pa.concat_tables(parts), key_cols)
+            if not with_bucket:
+                live = pc.not_equal(pc.fill_null(out[OP_COL], "U"), "D")
+                out = out.filter(live).drop_columns(
+                    [BUCKET_COL, LSN_COL, OP_COL])
+            yield from out.to_batches()
+
+
+def _conform_arrow(t, target):
+    """Arrow twin of :func:`_conform`: project ``t`` onto ``target`` by
+    column name."""
+    import pyarrow as pa
+
+    cols = []
+    for f in target:
+        if f.name not in t.column_names:
+            cols.append(pa.nulls(t.num_rows, f.type))
+        elif t.schema.field(f.name).type != f.type:
+            cols.append(t[f.name].cast(f.type, safe=False))
+        else:
+            cols.append(t[f.name])
+    return pa.Table.from_arrays(cols, schema=target)
+
+
+def _lww_winners(t, key_cols: list[str]):
+    """The max-``(_lsn, coalesce(_op, 'U'))`` row of each key of ``t``: one
+    sort by (keys, _lsn desc, op desc), then the first row of each run of
+    equal keys."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = t.num_rows
+    if n == 0:
+        return t
+    order = {f"k{i}": pc.fill_null(pc.cast(t[k], pa.string()), "\x00null")
+             for i, k in enumerate(key_cols)}
+    order["lsn"] = t[LSN_COL]
+    order["op"] = pc.fill_null(t[OP_COL], "U")
+    idx = pc.sort_indices(
+        pa.table(order),
+        sort_keys=[(f"k{i}", "ascending") for i in range(len(key_cols))]
+        + [("lsn", "descending"), ("op", "descending")])
+    first = None
+    for i in range(len(key_cols)):
+        k = pc.take(order[f"k{i}"], idx)
+        step = pc.not_equal(k.slice(1), k.slice(0, n - 1))
+        first = step if first is None else pc.or_(first, step)
+    head = pa.chunked_array([pa.array([True])] + first.chunks, pa.bool_())
+    return t.take(pc.filter(idx, head))
 
 
 def _json_safe(v: Any) -> bool:

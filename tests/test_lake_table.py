@@ -335,3 +335,96 @@ def test_async_finalize_requires_raw_mode(spark, tmp_table_dir):
     with pytest.raises(ValueError, match="async_finalize"):
         merge_cdc_batch(t, _delta_df(spark, 1), mode="cow",
                         async_finalize=True)
+
+
+def _raw_table(spark, d, buckets):
+    """A table of base files plus mixed (multi-bucket) raw L0 files, and the
+    feed that built it."""
+    from etl_api_bigquery_spark.cdc import change_feed
+    from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
+    t = LakeTable.create(spark, os.path.join(d, "raw"),
+                         T.StructType([T.StructField(c, T.StringType())
+                                       for c in ("repo", "path", "commit",
+                                                 "lang", "content")]),
+                         key_cols=["repo", "path"], num_buckets=buckets)
+    feed = change_feed(spark, n_events=4000, n_keys=300, n_epochs=2).cache()
+    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "raw")      # cow base
+    merge_cdc_batch(t, feed.filter("epoch = 1").repartition(3), 1, "raw",
+                    mode="raw", auto_compact_deltas=10**6)
+    mixed = [e for e in t.snapshot().files.values() if e.bucket == -1]
+    assert len(mixed) >= 2
+    return t, feed
+
+
+def test_bucket_pruned_read_over_mixed_l0(spark, tmp_table_dir):
+    """A bucket-pruned read of a table with mixed L0 files returns only the
+    requested buckets' rows, resolved against those buckets' own files."""
+    t, feed = _raw_table(spark, tmp_table_dir, buckets=8)
+    full = t.read(with_bucket=True)
+    for b in (0, 5):
+        pruned = t.read(buckets=[b], with_bucket=True)
+        assert {r[0] for r in pruned.select("_bucket").distinct().collect()
+                } == {b}
+        assert pruned.count() == full.filter(F.col("_bucket") == b).count()
+    public = t.read(buckets=[0, 5])
+    assert public.count() == full.filter(
+        F.col("_bucket").isin(0, 5) & (F.col("_op") != "D")).count()
+    feed.unpersist()
+
+
+def test_compact_folds_mixed_l0_closure(spark, tmp_table_dir):
+    """compact() on a table with mixed raw L0 rewrites the closure of their
+    bucket spans: no L0 is left and the state still matches the oracle."""
+    from etl_api_bigquery_spark.cdc import expected_final_state
+    from etl_api_bigquery_spark.cdc.oracle import assert_replay_match
+    t, feed = _raw_table(spark, tmp_table_dir, buckets=4)
+    assert t.compact() is not None
+    assert all(e.kind == "base" and e.bucket != -1
+               for e in t.snapshot().files.values())
+    assert_replay_match(t.read(), expected_final_state(feed))
+    feed.unpersist()
+
+
+def test_async_finalize_failure_clears_fence(spark, tmp_table_dir):
+    """A failed background commit must not leave its batch fenced: the
+    batch is not in the log, so a retry must be allowed to apply it."""
+    t = make_table(spark, tmp_table_dir)
+
+    def boom(adds):
+        raise RuntimeError("lineage exploded")
+
+    t.append_deltas(_delta_df(spark, 5), repartition=False, props_fn=boom,
+                    properties={"txn_app": "a1", "txn_batch": 3},
+                    async_finalize=True)
+    with pytest.raises(RuntimeError, match="lineage exploded"):
+        t.join_pending_commit()
+    assert t.last_txn("a1") is None
+
+
+def test_join_pending_commit_keeps_newer_future(spark, tmp_table_dir):
+    """A thread that waited on finalizer N must not clear finalizer N+1,
+    submitted while it waited."""
+    import threading
+    from concurrent.futures import Future
+
+    class Gate(Future):
+        def __init__(self):
+            super().__init__()
+            self.waiting = threading.Event()
+
+        def result(self, timeout=None):
+            self.waiting.set()
+            return super().result(timeout)
+
+    t = make_table(spark, tmp_table_dir)
+    first, second = Gate(), Future()
+    t._commit_future = first
+    waiter = threading.Thread(target=t.join_pending_commit,
+                              name="lake-maint-test")
+    waiter.start()
+    assert first.waiting.wait(10)
+    t._commit_future = second              # the next batch's finalizer
+    first.set_result(1)
+    waiter.join(10)
+    assert not waiter.is_alive()
+    assert t._commit_future is second
