@@ -128,19 +128,18 @@ def main() -> None:
                             num_buckets=num_buckets)
     merge_cdc_batch(wtab, change_feed(spark, n_events=200_000, n_keys=20_000,
                                       n_epochs=1),
-                    batch_id=0, txn_app="warmup", salt_buckets=8, mode="mor")
+                    batch_id=0, txn_app="warmup", mode="raw")
 
     # ---- ingest config. BENCH_MODE: "raw" (default — the engine's
-    # high-throughput zero-shuffle LSM path, now the runner default) | "mor"
-    # | "cow". BENCH_PREFILTER: "on"/"off"; unset defaults to ON for raw
-    # (keys-sized L0 — the benched throughput configuration; pass "off" to
-    # keep full event history in L0) and merge-default otherwise.
+    # high-throughput zero-shuffle L0 path, the runner default) | "cow".
+    # BENCH_PREFILTER: "on"/"off"; unset defaults to ON (keys-sized L0 —
+    # the benched throughput configuration; pass "off" to keep the full
+    # event history in L0).
     # BENCH_L0_GROUPS: raw L0 clustering (bucket ranges per task-file);
     # default 8 — bounded file count with group-local compaction.
     mode = os.environ.get("BENCH_MODE", "raw")
     pf_env = os.environ.get("BENCH_PREFILTER", "")
-    prefilter = {"off": False, "on": True}.get(
-        pf_env, True if mode == "raw" else None)
+    prefilter = pf_env != "off"
     l0_groups = int(os.environ.get("BENCH_L0_GROUPS", "8"))
 
     # Best-of-N replay reps: the host is a shared VM with 1.4-3x
@@ -159,12 +158,11 @@ def main() -> None:
         # compaction threshold (per-bucket read amplification) sized so at
         # least one compaction lands INSIDE the timed window — steady ingest
         # pays amortized compaction. Raw L0 grows ~files_per_epoch per bucket
-        # per trigger (one file per task x group); mor exactly 1.
-        compact_at = (files_per_epoch * max(1, n_epochs - 1)
-                      if mode == "raw" else max(2, n_epochs - 1))
+        # per trigger (one file per task x group).
+        compact_at = files_per_epoch * max(1, n_epochs - 1)
         runner = CdcStreamRunner(spark, table, feed_dir, rep_ckpt,
                                  txn_app="bench", prefilter=prefilter,
-                                 salt_buckets=8, mode=mode,
+                                 mode=mode,
                                  l0_groups=l0_groups,
                                  auto_compact_deltas=compact_at,
                                  max_files_per_trigger=files_per_epoch,

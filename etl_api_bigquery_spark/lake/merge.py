@@ -5,27 +5,26 @@ src/features/nhanh/bills/components/loader.py:327-583 —
 ``WHEN MATCHED THEN UPDATE SET <all cols> / WHEN NOT MATCHED THEN INSERT``,
 keys ``(id,date)`` / ``(bill_id,product_id)``) plus its last-writer-wins dedup
 (W1/J4: ROW_NUMBER() OVER (PARTITION BY key ORDER BY extraction_timestamp DESC)
-... rn=1, src/scripts/remove_duplicates.py:47-63) as one Spark-native
-copy-on-write merge:
+... rn=1, src/scripts/remove_duplicates.py:47-63) with one write path:
 
-1. **LWW dedup** the incoming change batch per key by monotonic LSN
-   (max_by over all columns; optional salted two-phase aggregation for
-   hot-key skew — SURVEY.md §4 custom item 1).
-2. **Bucket pruning**: collect the distinct buckets the batch touches
-   (≤ num_buckets small ints) and read ONLY those target files via the
-   manifest — the Spark analogue of the reference's partition-pruned MERGE
-   ("Partition filtering trong MERGE để tối ưu", loader.py:27).
-3. **Apply**: survivors = target rows whose key is NOT in the batch
-   (broadcast anti-join — target is never shuffled for the probe), unioned
-   with batch rows whose final op is not DELETE. Delete-then-reinsert inside
-   one batch resolves correctly because the max-LSN event's op decides
-   (SURVEY.md §7.5 item 2).
-4. **Atomic swap** of the touched buckets' files in one commit, carrying the
-   exactly-once fence properties and lineage metrics.
+1. **Append**: the change batch is written as scanned — no shuffle, no dedup —
+   with its bucket column computed map-side, as LWW-resolvable L0 files
+   carrying each event's LSN and op.
+2. **Resolve**: per key the max-(LSN, op) row wins, bucket-locally, in one
+   Arrow kernel (``_lww_kernel`` in :mod:`.table`). Delete-then-reinsert
+   inside one batch resolves correctly because the max-LSN event's op decides
+   (SURVEY.md §7.5 item 2); winning deletes stay as tombstones so an older
+   redelivered event cannot resurrect the key.
+3. **Commit** atomically, carrying the exactly-once fence properties and the
+   lineage metrics.
 
-Scale: shuffle volume is bounded by (batch size) + (data in touched buckets);
-untouched buckets are never read. At 10^10 events the knobs are num_buckets
-(more buckets -> finer rewrite granularity) and salt_buckets.
+``mode="raw"`` commits the L0 files and resolves at read time (and in
+background folds). ``mode="cow"`` folds the touched buckets right away: the
+same L0 files are staged uncommitted, the closure of the buckets they touch
+is resolved over the table's files plus the staged ones, and the result
+replaces those files in the batch's one commit — the Spark analogue of the
+reference's partition-pruned MERGE ("Partition filtering trong MERGE để tối
+ưu", loader.py:27). Untouched buckets are never read.
 """
 
 from __future__ import annotations
@@ -58,7 +57,7 @@ class MergeMetrics:
     upserts: int = 0
     buckets_touched: int = 0
     target_rows_read: int = 0
-    skew_factor: float = 0.0       # max keys per bucket / mean keys per bucket
+    skew_factor: float = 0.0       # max rows per bucket / mean rows per bucket
     duration_sec: float = 0.0
     version: int = -1
     skipped_fence: bool = False
@@ -75,210 +74,56 @@ def lww_dedup(
     events: DataFrame,
     key_cols: list[str],
     lsn_col: str = "lsn",
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """Keep the max-LSN event per key (deletes included — the winner's op
-    decides the key's fate).
-
-    Default path: ``groupBy(keys).agg(max_by(struct(*), lsn))`` — Catalyst
-    plans this as partial+final hash aggregation, so map-side combine already
-    absorbs most duplicate traffic.
-
-    ``salt_buckets > 0`` adds an explicit two-phase salted aggregation for
-    pathological single-key floods: phase 1 reduces per (key, salt), phase 2
-    per key. Salt is derived from the LSN so it is deterministic.
-    """
+    decides the key's fate): ``groupBy(keys).agg(max_by(struct(*), lsn))``,
+    which Catalyst plans as partial+final hash aggregation, so map-side
+    combine already absorbs most duplicate traffic. The batch oracle
+    (:func:`~etl_api_bigquery_spark.cdc.oracle.expected_final_state`) is
+    built on it."""
     from .table import session_expr_cache
     cols = events.columns
     cache = session_expr_cache(events.sparkSession)
-    ck = ("lww_dedup", tuple(cols), tuple(key_cols), lsn_col,
-          int(salt_buckets or 0))
+    ck = ("lww_dedup", tuple(cols), tuple(key_cols), lsn_col)
     tpl = cache.get(ck)
     if tpl is None:
-        # Column templates reused across micro-batches (the merge DAG is
-        # identical every trigger; only the source partition changes) —
-        # saves ~100 py4j round trips of driver-serial time per batch
+        # Column templates reused across micro-batches (the DAG is identical
+        # every trigger; only the source partition changes) — saves ~100
+        # serial py4j round trips per batch
         row = F.struct(*[F.col(c) for c in cols]).alias("_row")
-        tpl = {
-            "salt": F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_buckets))
-            if salt_buckets and salt_buckets > 1 else None,
-            "agg1": [F.max_by(row, F.col(lsn_col)).alias("_row"),
-                     F.max(lsn_col).alias("_mx")],
-            "agg2": F.max_by("_row", F.col("_mx")).alias("_row"),
-            "agg": F.max_by(row, F.col(lsn_col)).alias("_row"),
-            "unpack": [F.col(f"_row.{c}").alias(c) for c in cols],
-        }
+        tpl = {"agg": F.max_by(row, F.col(lsn_col)).alias("_row"),
+               "unpack": [F.col(f"_row.{c}").alias(c) for c in cols]}
         cache[ck] = tpl
-    if salt_buckets and salt_buckets > 1:
-        salted = events.withColumn("_salt", tpl["salt"])
-        phase1 = salted.groupBy(*key_cols, "_salt").agg(*tpl["agg1"])
-        winner = phase1.groupBy(*key_cols).agg(tpl["agg2"])
-    else:
-        winner = events.groupBy(*key_cols).agg(tpl["agg"])
-    return winner.select(*tpl["unpack"])
-
-
-# ---------------------------------------------------------------------------
-# Bloom prefilter plumbing. Spark ships distributed bloom-filter expressions
-# (BloomFilterAggregate / BloomFilterMightContain — the machinery behind its
-# own InjectRuntimeFilter optimizer rule, apache/spark
-# sql/catalyst/src/main/scala/org/apache/spark/sql/catalyst/expressions/
-# BloomFilterMightContain.scala) but does NOT register them in the public
-# function registry, so we construct the expressions through py4j. Everything
-# referenced is Apache Spark's own public source; if any handle is missing
-# (Spark Connect, future refactor) the capability probe fails closed and the
-# caller falls back to the exact broadcast semi-join.
-
-_BLOOM_DEFAULT_EXPECTED = 1 << 22   # first-batch guess; feedback-sized after
-_BLOOM_FPP = 0.008                  # ~10.4 bits/key; FPs are sound (see below)
-_BLOOM_MAX_BITS = 1 << 30           # 128 MB blob hard cap
-
-
-def _bloom_handles(spark) -> dict | None:
-    """py4j handles for the bloom expressions, or None if unavailable.
-
-    Probed once per session (cached in :func:`session_expr_cache`). Only
-    class/constructor SHAPE is probed here; a runtime failure during the
-    build action downgrades the session to the broadcast strategy too.
-    """
-    from .table import session_expr_cache
-    cache = session_expr_cache(spark)
-    h = cache.get(("bloom_handles",), False)
-    if h is not False:
-        return h
-    try:
-        jvm = spark._jvm
-        eu = jvm.org.apache.spark.sql.classic.ExpressionUtils
-        h = {
-            "eu": eu,
-            "agg": jvm.org.apache.spark.sql.catalyst.expressions.aggregate
-                      .BloomFilterAggregate,
-            "probe": jvm.org.apache.spark.sql.catalyst.expressions
-                        .BloomFilterMightContain,
-        }
-        # shape check: Column -> Expression bridge must exist
-        eu.expression(F.lit(1)._jc)
-    except Exception:
-        h = None
-    cache[("bloom_handles",)] = h
-    return h
-
-
-def _bloom_num_bits(expected: int, fpp: float = _BLOOM_FPP) -> int:
-    import math
-    bits = int(-expected * math.log(fpp) / (math.log(2) ** 2)) + 1
-    return max(1 << 16, min(bits, _BLOOM_MAX_BITS))
-
-
-def _build_token_bloom(winners_tok: DataFrame, tok_col: str,
-                       expected: int) -> tuple[bytes, int]:
-    """Distributed bloom build over the winner-token column.
-
-    One Spark action: the groupBy winner agg runs as usual, then a
-    BloomFilterAggregate stage merges per-partition partial blooms on an
-    EXECUTOR (single reduce task) — the driver only receives the final
-    ~(bits/8)-byte blob plus an exact winner count (ridden on the same agg,
-    feeding the next batch's sizing). Replaces the broadcast variant's
-    driver-serial LongHashedRelation build, which at ~7M winner keys costs
-    ~1 s per micro-batch and does not shrink with executors.
-    """
-    from pyspark.sql.column import Column
-    spark = winners_tok.sparkSession
-    h = _bloom_handles(spark)
-    assert h is not None
-    # BloomFilterAggregate validates its sizing args against these session
-    # confs (defaults 4M items / 67M bits — sized for join runtime filters);
-    # raise them so OUR explicitly-chosen sizes always pass.
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-                   str(1 << 31))
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-                   str(_BLOOM_MAX_BITS))
-    expected = max(1024, expected)
-    jexpr = h["eu"].expression
-    ba = h["agg"](jexpr(winners_tok[tok_col]._jc),
-                  jexpr(F.lit(expected).cast("long")._jc),
-                  jexpr(F.lit(_bloom_num_bits(expected)).cast("long")._jc))
-    bloom_col = Column(h["eu"].column(ba.toAggregateExpression()))
-    row = winners_tok.agg(bloom_col.alias("_bf"),
-                          F.count(F.lit(1)).alias("_n")).head()
-    return bytes(row[0]), int(row[1])
-
-
-def _bloom_might_contain(df: DataFrame, blob: bytes, tok_col):
-    from pyspark.sql.column import Column
-    h = _bloom_handles(df.sparkSession)
-    mc = h["probe"](h["eu"].expression(F.lit(blob)._jc),
-                    h["eu"].expression(tok_col._jc))
-    return df.filter(Column(h["eu"].column(mc)))
+    return events.groupBy(*key_cols).agg(tpl["agg"]).select(*tpl["unpack"])
 
 
 def lww_prefilter(
     events: DataFrame,
     key_cols: list[str],
     lsn_col: str = "lsn",
-    strategy: str = "broadcast",
-    expected_winners: int | None = None,
 ) -> DataFrame:
-    """Bandwidth-reducing first pass of LWW dedup: find each key's winning
-    (max) LSN over a NARROW shuffle of just ``(key_hash, lsn)`` (Catalyst
-    column-prunes the wide payload out of this subtree), compress the winner
-    set, and filter the full batch against it map-side.
+    """Bandwidth-reducing first pass of LWW: find each key's winning (max)
+    LSN over a NARROW shuffle of just ``(keys, lsn)`` (Catalyst
+    column-prunes the wide payload out of this subtree) and filter the full
+    batch against that winner set map-side, so losing events never reach
+    the payload write.
 
-    Why: the naive dedup shuffles full rows — for content-heavy CDC events
-    (~hundreds of bytes each) the shuffle ser/deser of payload bytes is the
-    scaling bottleneck (memory bandwidth, not CPU). With update ratio r
-    (events per key per batch), this pass cuts full-row shuffle volume by ~r×
-    at the cost of one narrow shuffle + a second source scan (page-cached).
+    Not exact on its own: two events of one key sharing the max LSN would
+    both survive — downstream LWW (the read/fold kernel) folds them, like
+    any cross-file duplicate.
 
-    Not exact on its own: two events of one key sharing the max LSN would both
-    survive (LSNs are unique in a real log, but we don't rely on it) — the
-    caller still runs :func:`lww_dedup` on the filtered rows, which is cheap
-    because survivors ≈ distinct keys.
-
-    The membership test is on ``(key, lsn)`` composites (not lsn alone):
-    testing the bare LSN would let an event of a DIFFERENT key sharing a
-    winning LSN slip through (harmless but wasteful), and with epoch-style
-    non-unique LSNs the filter would pass nearly everything while still
-    paying its shuffle.
+    The winner set is compressed to ONE 64-bit token per key,
+    ``xxhash64(xxhash64(keys), lsn)``, and the broadcast semi-join keys on
+    that single long: 8 bytes/key, and the broadcast relation becomes a
+    primitive ``LongHashedRelation``. Testing the bare LSN would let an event
+    of a DIFFERENT key sharing a winning LSN slip through. A token collision
+    is a one-sided spurious PASS (a key's own winner always matches its own
+    token), folded downstream. NULL keys hash via the same
+    coalesce-to-sentinel rule as bucketing.
 
     Events with NULL lsn never match and are filtered out here — by
-    contract (documented on :func:`merge_cdc_batch`) the CDC envelope requires
-    a total, non-NULL LSN order; NULL-lsn rows are undefined input that the
-    unfiltered path would mangle anyway (``max_by`` over a NULL ordering key).
-
-    The winner set's only job is to pass each key's own max-LSN event, and a
-    key's own entry is in the set by construction — so any lossy-compressed
-    representation that can only ADD spurious passes (hash collisions, bloom
-    false positives) is sound: spurious survivors are folded by the
-    downstream :func:`lww_dedup` / read-side LWW exactly like LSN ties.
-    NULL keys hash via the same coalesce-to-sentinel rule as bucketing, so
-    NULL-keyed legacy rows are filtered consistently.
-
-    ``strategy="broadcast"``: the winner set is compressed to ONE 64-bit
-    token per key — ``xxhash64(xxhash64(keys), lsn)`` — and the semi-join
-    keys on that single long. 8 bytes/key in the broadcast, and (measured,
-    the reason for the single-column form) the broadcast relation build
-    becomes a primitive ``LongHashedRelation`` instead of a generic
-    two-column row map: the relation is built on the DRIVER once per batch,
-    a serial term that does not shrink with executors, so its constant
-    matters for scaling efficiency more than for wall time. Token collisions
-    are one-sided spurious PASSES (folded downstream, see above); a key's
-    own winner always matches its own token.
-
-    ``strategy="bloom"``: same winner tokens, but compressed into a bloom
-    filter built DISTRIBUTED (partial blooms merged in an executor-side
-    reduce task; the driver only relays the ~10-bits/key blob into the probe
-    expression as a literal — stage-probe-measured, this removes the ~1 s
-    per-batch driver-serial LongHashedRelation build, the largest
-    non-scaling term in the N→4N elastic pairs). Bloom false positives are
-    spurious PASSES, sound per the compression argument above; at the
-    default ~0.8% FP rate they add <1% spurious write volume. Sizing
-    feedback: the exact winner count rides on the build aggregate and sizes
-    the next batch's filter. Implemented with Spark's own runtime-filter
-    expressions via py4j (not in the public registry); if they are
-    unavailable or fail at runtime the session downgrades to "broadcast"
-    with a one-line warning.
-    """
+    contract (documented on :func:`merge_cdc_batch`) the CDC envelope
+    requires a total, non-NULL LSN order."""
     from .table import session_expr_cache
     cache = session_expr_cache(events.sparkSession)
     ck = ("lww_prefilter", tuple(key_cols), lsn_col)
@@ -288,39 +133,22 @@ def lww_prefilter(
                                      F.lit("\x00null")) for k in key_cols])
         # xxhash64 SKIPS null children (hash unchanged), so a NULL lsn would
         # token-collide with its bare key hash instead of never matching —
-        # the explicit isNotNull filter below preserves the documented
+        # the explicit isNotNull filter below keeps the documented
         # "NULL-lsn events are filtered out here" contract.
         tpl = {"wtok": F.xxhash64(kh, F.col("_w_lsn")).alias("_wtok"),
                "ltok": F.xxhash64(kh, F.col(lsn_col)).alias("_wtok"),
                "notnull": F.col(lsn_col).isNotNull(),
                "agg": F.max(lsn_col).alias("_w_lsn")}
         cache[ck] = tpl
-    # Group by the REAL keys, then project the token for the broadcast
-    # relation. Grouping by the hash directly would merge two colliding keys
-    # into one group whose max(lsn) matches only the larger key's winner —
-    # the other key's latest event would be silently DROPPED (one-sided error
-    # in the wrong direction: a loss, not a spurious pass). Hashing after the
-    # exact group keeps the soundness claim above true: a collision can only
-    # let extra rows through, which lww_dedup folds.
+    # Group by the REAL keys, then project the token. Grouping by the hash
+    # directly would merge two colliding keys into one group whose max(lsn)
+    # matches only the larger key's winner — the other key's latest event
+    # would be silently DROPPED (an error in the wrong direction).
     winners = (events.groupBy(*key_cols)
                .agg(tpl["agg"])
                .select(tpl["wtok"]))
     left = (events.filter(tpl["notnull"])
             .select("*", tpl["ltok"]))
-    if strategy == "bloom" and _bloom_handles(events.sparkSession) is not None:
-        try:
-            blob, n = _build_token_bloom(
-                winners, "_wtok",
-                expected_winners or cache.get(("bloom_last_winners",))
-                or _BLOOM_DEFAULT_EXPECTED)
-            cache[("bloom_last_winners",)] = n
-            return _bloom_might_contain(left, blob,
-                                        left["_wtok"]).drop("_wtok")
-        except Exception as e:  # downgrade loudly, stay correct
-            import warnings
-            warnings.warn(f"bloom prefilter failed ({e!r}); session "
-                          "downgraded to broadcast strategy")
-            cache[("bloom_handles",)] = None
     return left.join(F.broadcast(winners), on="_wtok",
                      how="left_semi").drop("_wtok")
 
@@ -509,7 +337,7 @@ def merge_backfill(
     so they prune on the footer min/max stats of the FK columns instead —
     a bucket none of whose files' FK ranges intersect the source's FK range
     cannot contain a matching row and rides through untouched. Pruning is
-    bucket-granular (not per-file) for the same MOR-delta-resolution reason
+    bucket-granular (not per-file) for the same L0-resolution reason
     as :meth:`LakeTable.delete_where`."""
     from .table import MIXED_BUCKET
     keys = join_keys or table.key_cols
@@ -552,6 +380,47 @@ def merge_backfill(
                                 snap.schema_id, props)
 
 
+def _lineage(m: MergeMetrics, counts: dict[str, Any], table: LakeTable,
+             adds: list, victims: list, mode: str, t0: float) -> dict:
+    """Fill ``m`` from the write job's Observation ``counts`` and the
+    harvested files, and return the commit's lineage record.
+
+    ``keys`` counts the batch's events, ``adds`` are the batch's harvested
+    L0 files and ``victims`` the table files a fold read. Skew is max / mean
+    rows per touched bucket: exact for bucket-pure files; a mixed file's
+    rows are spread evenly over its ``_bucket`` span.
+
+    Row conservation: the harvested files must hold every event the write
+    job wrote; a mismatch raises, so the commit does not land."""
+    m.keys = int(counts.get("keys") or 0)
+    m.deletes = int(counts.get("deletes") or 0)
+    m.upserts = m.keys - m.deletes
+    harvested = sum(e.rows for e in adds)
+    if harvested != m.keys:
+        raise RuntimeError(
+            f"batch {m.batch_id}: the write job wrote {m.keys} events but "
+            f"{harvested} were harvested; not committing")
+    per_bucket: dict[int, float] = {}
+    for e in adds:
+        span = table.buckets_of_entries([e])
+        for b in span:
+            per_bucket[b] = per_bucket.get(b, 0.0) + e.rows / len(span)
+    m.buckets_touched = len(per_bucket)
+    mean = sum(per_bucket.values()) / len(per_bucket) if per_bucket else 0.0
+    m.skew_factor = round(max(per_bucket.values()) / mean, 3) if mean else 0.0
+    m.target_rows_read = sum(e.rows for e in victims)
+    elapsed = max(time.monotonic() - t0, 1e-9)
+    return {"lineage": {
+        "batch_id": m.batch_id, "keys": m.keys, "deletes": m.deletes,
+        "upserts": m.upserts, "buckets_touched": m.buckets_touched,
+        "skew_factor": m.skew_factor, "mode": mode,
+        "target_rows_read": m.target_rows_read,
+        # reference metric parity: records_per_second per job
+        # (src/monitoring/metrics.py:100), write-inclusive
+        "events_per_sec": round(m.keys / elapsed, 1),
+    }}
+
+
 def merge_cdc_batch(
     table: LakeTable,
     events: DataFrame,
@@ -559,13 +428,11 @@ def merge_cdc_batch(
     txn_app: str | None = None,
     lsn_col: str = "lsn",
     op_col: str = "op",
-    salt_buckets: int = 0,
     allow_schema_evolution: bool = True,
     extra_props: dict[str, Any] | None = None,
     mode: str = "cow",
     auto_compact_deltas: int = 16,
-    prefilter: bool | None = None,
-    prefilter_strategy: str = "broadcast",
+    prefilter: bool = False,
     l0_groups: int | str | None = None,
     compact_async: bool = False,
     async_finalize: bool = False,
@@ -576,77 +443,64 @@ def merge_cdc_batch(
     op semantics: I/U upsert (U on an absent key inserts — same as the
     reference MERGE), D deletes. LWW by lsn. **Contract: lsn is non-NULL and
     totally ordered per key** — NULL-lsn rows are undefined input (the
-    prefilter drops them; without it ``max_by`` over a NULL ordering key
-    would corrupt the winner row).
+    prefilter drops them).
 
-    ``prefilter`` defaults to ON for cow/mor (losing events never reach the
-    payload shuffle) and OFF for raw — raw mode's contract is "L0 preserves
-    the full event history for audit/replay", which a prefilter would
-    silently break; pass ``prefilter=True`` explicitly to trade that
-    history for ~r× less L0 write volume.
+    Both modes write the batch the same way: as scanned, bucket column
+    computed map-side, no shuffle, with the event and delete counts observed
+    on the write job itself. They yield identical read results:
+
+    * ``mode="cow"`` (default) — copy-on-write: the batch is staged as
+      bucket-pure L0 files that no commit references; the closure of the
+      buckets they touch is folded over the table's files plus the staged
+      ones by the bucket-local LWW kernel, and the result replaces those
+      files in ONE commit (:meth:`LakeTable.merge_staged`). Reads stay
+      compacted; write cost is O(touched data).
+    * ``mode="raw"`` — LSM-style append: the L0 files are committed as they
+      are and resolved at read time. Maximum write throughput.
+      ``l0_groups=G`` clusters the L0 files into G contiguous bucket ranges
+      per task (task-local sort, still no shuffle; G = table.num_buckets
+      gives fully bucket-PURE L0), trading file count for per-bucket
+      compaction/read locality. ``l0_groups="auto"`` sizes G per batch from
+      the source bytes and a 16 MB L0 file-size floor (see
+      :func:`_l0_groups_for`). Compaction triggers when any bucket's delta
+      read amplification reaches ``auto_compact_deltas`` and folds only the
+      closure of the hot buckets' file spans; ``compact_async=True`` runs
+      that fold on a background thread overlapping the next trigger
+      (see :meth:`LakeTable.compact_deltas_async`).
+
+    ``prefilter=True`` drops losing events before any payload bytes are
+    written (:func:`lww_prefilter`, one narrow (keys, lsn) aggregation and
+    a broadcast semi-join). Off by default: L0 then keeps the full event
+    history for audit/replay.
 
     Default-mode note: this function defaults to ``mode="cow"`` while
     :class:`~etl_api_bigquery_spark.streaming.runner.CdcStreamRunner`
-    defaults to ``mode="raw"`` — deliberately. A direct ``merge_cdc_batch``
-    call is the library/batch API (one-shot backfills, tests, oracle
-    queries), where the read-optimized copy-on-write result is the least
-    surprising default; the runner is the sustained-ingest pipeline, where
-    the zero-shuffle LSM append is the right production default (raw wins
-    ~25-30% at 24M-event batches and, since round 5's clean bench, also at
-    1M-event micro-batches — see BENCH/BASELINE.md). Pass ``mode``
-    explicitly when benchmarking either path.
-
-    Write strategies (both yield identical read results):
-
-    * ``mode="cow"`` — copy-on-write: rewrite the touched buckets' files with
-      survivors ∪ upserts. Best read performance; write cost O(touched data).
-    * ``mode="mor"`` — merge-on-read: append LWW-resolvable delta files,
-      O(batch) write cost regardless of table size; reads resolve max-LSN per
-      key and drop tombstones; compaction auto-triggers when any touched
-      bucket accumulates ``auto_compact_deltas`` delta files. This is the
-      high-throughput CDC-ingest path (the Hudi/Paimon-style tradeoff) —
-      at 10^10 events/day the per-batch rewrite of COW is unaffordable.
-    * ``mode="raw"`` — LSM-style raw append: NO shuffle, NO dedup — the batch
-      is written exactly as scanned (bucket column computed map-side);
-      read-side LWW absorbs in-batch duplicates too. Maximum write
-      throughput. ``l0_groups=G`` clusters the L0 files into G contiguous
-      bucket ranges per task (task-local sort, still no shuffle; G =
-      table.num_buckets gives fully bucket-PURE L0), restoring per-bucket
-      compaction/read locality at the cost of more, smaller files (tasks x G
-      per trigger — the knob a 1000-executor deployment tunes against its
-      file-count budget). ``l0_groups="auto"`` sizes G per batch from the
-      source bytes and a 16 MB L0 file-size floor (see
-      :func:`_l0_groups_for`) — full purity at production per-task volumes,
-      graceful coarsening at bench scale instead of KB-size files. Compaction triggers when any bucket's delta read
-      amplification reaches ``auto_compact_deltas`` and folds only the
-      closure of the hot buckets' file spans (ungrouped L0 spans everything,
-      degrading to the full L0 fold).
-
-    ``compact_async=True`` (mor/raw only): auto-compaction runs on a
-    background driver thread overlapping the next trigger's scan instead of
-    extending this batch's critical path — the per-trigger serial tail no
-    longer idles the cluster while a fold is due. See
-    :meth:`LakeTable.compact_deltas_async` for the correctness argument.
+    defaults to ``mode="raw"`` — deliberately. A direct call is the
+    library/batch API (one-shot backfills, tests, oracle queries), where a
+    compacted result is the least surprising; the runner is the
+    sustained-ingest pipeline, where the append is the right default.
 
     ``async_finalize=True`` (raw only): the batch's Spark write job runs
     inline, but the driver-serial tail — parquet footer harvest, lineage,
     commit-log fsync, the auto-compaction trigger — runs on a background
-    driver thread so it overlaps the caller's next trigger (Spark's
-    walCommit/getBatch/planning in a stream, the next batch's scan in a
-    replay loop). The returned metrics' ``version``/lineage/``phases``
-    fields settle only when the commit lands (``m.version`` stays -1 until
-    then); call :meth:`LakeTable.join_pending_commit` before reading them.
-    Exactly-once is preserved (the fence counts the pending commit, commit
-    order equals batch order), but durability is deferred by one batch —
-    see :meth:`LakeTable.append_deltas` and
+    thread so it overlaps the caller's next trigger. The returned
+    metrics' ``version``/lineage/``phases`` fields settle only when the
+    commit lands (``m.version`` stays -1 until then); call
+    :meth:`LakeTable.join_pending_commit` before reading them. Exactly-once
+    is preserved (the fence counts the pending commit, commit order equals
+    batch order), but durability is deferred by one batch — see
+    :meth:`LakeTable.append_deltas` and
     :meth:`~etl_api_bigquery_spark.streaming.runner.CdcStreamRunner.repair_fence_gap`.
     """
+    from pyspark.sql import Observation
+
+    from .table import session_expr_cache
     t0 = time.monotonic()
+    if mode not in ("cow", "raw"):
+        raise ValueError(f"mode must be 'cow' or 'raw', not {mode!r}")
     if async_finalize and mode != "raw":
         raise ValueError(
-            "async_finalize requires mode='raw' (the LSM append path)")
-    if prefilter is None:
-        prefilter = mode != "raw"
+            "async_finalize requires mode='raw' (the L0 append path)")
     m = MergeMetrics(batch_id=batch_id)
 
     # ---- exactly-once fence: skip batches already committed (idempotent
@@ -662,199 +516,58 @@ def merge_cdc_batch(
     if allow_schema_evolution:
         m.schema_evolved = evolve_for_batch(table, events)
 
-    snap = table.snapshot()
-    key_cols = table.key_cols
+    props: dict[str, Any] = dict(extra_props or {})
+    if txn_app is not None:
+        props["txn_app"] = txn_app
+        props["txn_batch"] = batch_id
+    if mode == "raw" and l0_groups == "auto":
+        l0_groups = _adaptive_l0_groups(table, events)
+        props["l0_groups"] = l0_groups
+    src = (lww_prefilter(events, table.key_cols, lsn_col)
+           if prefilter else events)
+    delta = (src.withColumn(BUCKET_COL, table.bucket_expr())
+             .select(*_delta_select_exprs(
+                 table, table.snapshot(), set(events.columns) | {BUCKET_COL},
+                 lsn_col, op_col)))
+    # counts ride on the write job via Observation — no extra stats pass
+    cache = session_expr_cache(events.sparkSession)
+    obs_aggs = cache.get(("delta_obs",))
+    if obs_aggs is None:
+        obs_aggs = [
+            F.count(F.lit(1)).alias("keys"),
+            F.sum(F.when(F.col(OP_COL) == OP_DELETE, 1).otherwise(0)
+                  ).alias("deletes")]
+        cache[("delta_obs",)] = obs_aggs
+    obs = Observation()
+    delta = delta.observe(obs, *obs_aggs)
 
-    # ---- raw mode: append with NO full-row shuffle; no per-batch stats jobs.
-    # Per-bucket lineage comes free from the harvested file entries.
-    # Prefilter is OFF by default here (L0 keeps the full event history);
-    # with an explicit ``prefilter=True`` the only shuffle in the whole batch
-    # is the NARROW (keys, lsn) aggregation — losing LWW events are dropped
-    # by a broadcast semi-join BEFORE any payload bytes move, so L0 stays
-    # ~keys-sized; read-side max-LSN resolution absorbs any residual
-    # same-max-LSN ties exactly as it absorbs cross-file duplicates.
-    if mode == "raw":
-        from pyspark.sql import Observation
-        from .table import session_expr_cache
-        props: dict[str, Any] = dict(extra_props or {})
-        if txn_app is not None:
-            props["txn_app"] = txn_app
-            props["txn_batch"] = batch_id
-        snap0 = table.snapshot()
-        if l0_groups == "auto":
-            l0_groups = _adaptive_l0_groups(table, events)
-            props["l0_groups"] = l0_groups
-        _t_bloom0 = time.monotonic()
-        src = (lww_prefilter(events, key_cols, lsn_col,
-                             strategy=prefilter_strategy)
-               if prefilter else events)
-        # bloom strategy runs its build action inside lww_prefilter — time it
-        # so the phase telemetry separates build from the write job proper
-        _t_bloom = time.monotonic() - _t_bloom0
-        raw = src.withColumn(BUCKET_COL, table.bucket_expr())
-        delta = raw.select(*_delta_select_exprs(
-            table, snap0, set(events.columns) | {BUCKET_COL},
-            lsn_col, op_col))
-        # counts ride on the write job via Observation — no extra stats pass
-        cache = session_expr_cache(events.sparkSession)
-        obs_aggs = cache.get(("raw_obs",))
-        if obs_aggs is None:
-            obs_aggs = [
-                F.count(F.lit(1)).alias("keys"),
-                F.sum(F.when(F.col(OP_COL) == OP_DELETE, 1).otherwise(0)
-                      ).alias("deletes")]
-            cache[("raw_obs",)] = obs_aggs
-        obs = Observation()
-        delta = delta.observe(obs, *obs_aggs)
+    def lineage_props(adds, victims=()):
+        return _lineage(m, obs.get, table, adds, victims, mode, t0)
 
-        def lineage_props(adds):
-            got = obs.get
-            m.keys = int(got.get("keys") or 0)     # events appended
-            m.deletes = int(got.get("deletes") or 0)
-            m.upserts = m.keys - m.deletes
-            m.buckets_touched = len(table.buckets_of_entries(adds))
-            elapsed = max(time.monotonic() - t0, 1e-9)
-            return {"lineage": {
-                "batch_id": batch_id, "keys": m.keys, "deletes": m.deletes,
-                "upserts": m.upserts, "buckets_touched": m.buckets_touched,
-                "skew_factor": 0.0, "mode": mode, "target_rows_read": 0,
-                "events_per_sec": round(m.keys / elapsed, 1),
-            }}
-
-        _t_plan = time.monotonic() - t0
-
-        def _post(version: int) -> None:
-            # everything after the data-file commit: l0 feedback, the
-            # auto-compaction trigger, and the phase telemetry. Runs inline
-            # (sync) or on the commit-finalizer thread (async_finalize).
-            _t_post0 = time.monotonic()
-            _write_phases = dict(table.last_write_phases)
-            # trailing write stats feeding the next batch's l0_groups="auto":
-            # out/in byte ratio (batch path) + (bytes, files, G) feedback
-            # (streaming path, where the batch DF exposes no input files)
-            in_b = getattr(table, "_last_l0_in_bytes", 0)
-            if in_b and _write_phases.get("out_bytes"):
-                table.l0_out_ratio = _write_phases["out_bytes"] / in_b
-            if _write_phases.get("out_bytes"):
-                table._last_l0_write = (_write_phases["out_bytes"],
-                                        _write_phases.get("n_files", 1),
-                                        l0_groups if isinstance(l0_groups, int)
-                                        else 1)
-            counts = table.bucket_read_amplification()
-            hot = [b for b, c in counts.items() if c >= auto_compact_deltas]
-            if hot:
-                cprops = {"auto_compact_for_batch": batch_id}
-                if compact_async:
-                    table.compact_deltas_async(hot, properties=cprops)
-                else:
-                    table.compact_deltas(buckets=hot, properties=cprops)
-            m.version = version
-            m.extra["phases"] = {
-                "plan_build_s": round(_t_plan, 4),
-                "prefilter_build_s": round(_t_bloom, 4),
-                **_write_phases,
-                "compact_s": round(time.monotonic() - _t_post0, 4),
-            }
-
-        if async_finalize:
-            # write job runs inline (the parallel part); footer harvest +
-            # lineage + commit fsync + compaction trigger land on the
-            # finalizer thread, overlapping the caller's next batch. m's
-            # version/lineage/phases fields settle when the commit lands —
-            # callers read them after LakeTable.join_pending_commit().
-            m.extra["async_commit"] = True
-            table.append_deltas(delta, properties=props,
-                                repartition=False, bucket_pure=False,
-                                bucket_groups=l0_groups,
-                                props_fn=lineage_props,
-                                async_finalize=True, post_commit=_post)
-        else:
-            _post(table.append_deltas(delta, properties=props,
-                                      repartition=False, bucket_pure=False,
-                                      bucket_groups=l0_groups,
-                                      props_fn=lineage_props))
+    if mode == "cow":
+        m.version = table.merge_staged(delta, props, props_fn=lineage_props)
         m.duration_sec = time.monotonic() - t0
         return m
 
-    # ---- 1. ONE shuffle for the whole batch: repartition by bucket, then
-    # dedup grouped by (bucket, keys) — HashPartitioning(_bucket) satisfies
-    # ClusteredDistribution(_bucket, keys) because _bucket is a function of
-    # the keys, so Catalyst inserts no second exchange; the bucket-pure write
-    # then needs no repartition either. (Was: dedup shuffle + write shuffle.)
-    #
-    # After the prefilter the surviving batch is ~1 row per key (only LSN
-    # ties remain), so hot-key skew is already defused and the salted
-    # two-phase aggregation would be a pure extra pass over the payload —
-    # skip it. The narrow (hash, lsn) prefilter aggregation itself is
-    # skew-immune: its partial (map-side) aggregation collapses a hot key's
-    # flood before the 16-byte rows ever shuffle.
-    src = (lww_prefilter(events, key_cols, lsn_col,
-                         strategy=prefilter_strategy)
-           if prefilter else events)
-    effective_salt = 0 if prefilter else salt_buckets
-    evb = src.withColumn(BUCKET_COL, table.bucket_expr())
-    evb = evb.repartition(table.num_buckets, F.col(BUCKET_COL))
-    winners = lww_dedup(evb, [BUCKET_COL] + key_cols, lsn_col, effective_salt)
-    # winners' columns == events' + _bucket (lww_dedup is column-preserving);
-    # derive them instead of calling winners.columns, which would force an
-    # extra driver-side analysis of the whole dedup subtree per trigger
-    winner_cols = set(events.columns) | {BUCKET_COL}
+    _t_plan = time.monotonic() - t0
 
-    if mode == "mor":
-        # ---- merge-on-read: ONE Spark job for the whole batch. Counts ride
-        # on the write via Observation (no separate stats pass, no cache);
-        # per-bucket key counts / skew come from the bucket-pure delta files'
-        # harvested footers. Empty batches still commit — the fence advances.
-        from pyspark.sql import Observation
-        from .table import session_expr_cache
-        cache = session_expr_cache(events.sparkSession)
-        obs_aggs = cache.get(("mor_obs", op_col))
-        if obs_aggs is None:
-            obs_aggs = [
-                F.count(F.lit(1)).alias("keys"),
-                F.sum(F.when(F.col(op_col) == OP_DELETE, 1).otherwise(0)
-                      ).alias("deletes")]
-            cache[("mor_obs", op_col)] = obs_aggs
-        obs = Observation()
-        observed = winners.observe(obs, *obs_aggs)
-        delta = observed.select(*_delta_select_exprs(
-            table, snap, winner_cols, lsn_col, op_col))
-
-        props: dict[str, Any] = dict(extra_props or {})
-        if txn_app is not None:
-            props["txn_app"] = txn_app
-            props["txn_batch"] = batch_id
-
-        def lineage_props(adds):
-            got = obs.get  # available: the write action just finished
-            m.keys = int(got.get("keys") or 0)
-            m.deletes = int(got.get("deletes") or 0)
-            m.upserts = m.keys - m.deletes
-            per_bucket: dict[int, int] = {}
-            for e in adds:
-                per_bucket[e.bucket] = per_bucket.get(e.bucket, 0) + e.rows
-            m.buckets_touched = len(per_bucket)
-            mean_k = m.keys / len(per_bucket) if per_bucket else 0.0
-            m.skew_factor = (round(max(per_bucket.values()) / mean_k, 3)
-                             if mean_k else 0.0)
-            elapsed = max(time.monotonic() - t0, 1e-9)
-            return {"lineage": {
-                "batch_id": batch_id, "keys": m.keys, "deletes": m.deletes,
-                "upserts": m.upserts, "buckets_touched": m.buckets_touched,
-                "skew_factor": m.skew_factor, "mode": mode,
-                "target_rows_read": 0,
-                # reference metric parity: records_per_second per job
-                # (src/monitoring/metrics.py:100), write-inclusive
-                "events_per_sec": round(m.keys / elapsed, 1),
-            }}
-
-        _t_plan = time.monotonic() - t0   # fence + snapshot + DAG build
-        m.version = table.append_deltas(delta, properties=props,
-                                        repartition=False,
-                                        props_fn=lineage_props)
-        _t_commit_done = time.monotonic()
-        _write_phases = dict(table.last_write_phases)  # before compaction
-        # amortized compaction keeps read amplification bounded
+    def _post(version: int) -> None:
+        # everything after the data-file commit: l0 feedback, the
+        # auto-compaction trigger, and the phase telemetry. Runs inline
+        # (sync) or on the commit-finalizer thread (async_finalize).
+        _t_post0 = time.monotonic()
+        _write_phases = dict(table.last_write_phases)
+        # trailing write stats feeding the next batch's l0_groups="auto":
+        # out/in byte ratio (batch path) + (bytes, files, G) feedback
+        # (streaming path, where the batch DF exposes no input files)
+        in_b = getattr(table, "_last_l0_in_bytes", 0)
+        if in_b and _write_phases.get("out_bytes"):
+            table.l0_out_ratio = _write_phases["out_bytes"] / in_b
+        if _write_phases.get("out_bytes"):
+            table._last_l0_write = (_write_phases["out_bytes"],
+                                    _write_phases.get("n_files", 1),
+                                    l0_groups if isinstance(l0_groups, int)
+                                    else 1)
         counts = table.bucket_read_amplification()
         hot = [b for b, c in counts.items() if c >= auto_compact_deltas]
         if hot:
@@ -863,119 +576,25 @@ def merge_cdc_batch(
                 table.compact_deltas_async(hot, properties=cprops)
             else:
                 table.compact_deltas(buckets=hot, properties=cprops)
-        m.duration_sec = time.monotonic() - t0
-        # driver-serial decomposition for the scaling evidence: everything
-        # except write_job_s is constant per trigger and amortizes with
-        # batch size
+        m.version = version
         m.extra["phases"] = {
             "plan_build_s": round(_t_plan, 4),
             **_write_phases,
-            "compact_s": round(time.monotonic() - _t_commit_done, 4),
+            "compact_s": round(time.monotonic() - _t_post0, 4),
         }
-        return m
 
-    # ---- copy-on-write: needs the touched-bucket list BEFORE reading the
-    # target (manifest pruning), so winners is cached and stats collected
-    # up front.
-    winners = winners.cache()
-    try:
-        # one pass for counts + touched buckets + skew factor (small result)
-        bstats = (
-            winners.groupBy(BUCKET_COL)
-            .agg(F.count("*").alias("k"),
-                 F.sum(F.when(F.col(op_col) == OP_DELETE, 1).otherwise(0)).alias("d"))
-            .collect()
-        )
-        if not bstats:
-            m.duration_sec = time.monotonic() - t0
-            return m
-        buckets = [int(r[BUCKET_COL]) for r in bstats]
-        m.keys = sum(int(r["k"]) for r in bstats)
-        m.deletes = sum(int(r["d"]) for r in bstats)
-        m.upserts = m.keys - m.deletes
-        m.buckets_touched = len(buckets)
-        mean_k = m.keys / len(buckets)
-        m.skew_factor = round(max(int(r["k"]) for r in bstats) / mean_k, 3) if mean_k else 0.0
-
-        props = dict(extra_props or {})
-        props["lineage"] = {
-            "batch_id": batch_id, "keys": m.keys, "deletes": m.deletes,
-            "upserts": m.upserts, "buckets_touched": m.buckets_touched,
-            "skew_factor": m.skew_factor, "mode": mode,
-        }
-        if txn_app is not None:
-            props["txn_app"] = txn_app
-            props["txn_batch"] = batch_id
-
-        # bucket-pruned target read (manifest skipping)
-        target_files = snap.files_for_buckets(buckets)
-        from .table import MIXED_BUCKET
-        if any(e.bucket == MIXED_BUCKET for e in target_files):
-            # raw-append deltas span buckets: a partial rewrite would leave
-            # their foreign-bucket rows duplicated -> widen to the closure
-            # of the mixed files' bucket spans (grouped L0 stays local;
-            # only full-span ungrouped L0 degrades to a full rewrite)
-            buckets = table.expand_bucket_closure(snap, buckets)
-            target_files = snap.files_for_buckets(buckets)
-        m.target_rows_read = sum(e.rows for e in target_files)
-        props["lineage"]["target_rows_read"] = m.target_rows_read
-        target = table.read(buckets=buckets, with_bucket=True)
-
-        # LSN-aware apply: a batch event only wins against table rows it
-        # actually beats. Without this, an OLDER event redelivered in a
-        # LATER micro-batch would clobber newer data (found by the
-        # hypothesis property suite; MOR is immune because it resolves
-        # global max-LSN at read). cur_lsn per batch key is small
-        # (≤ batch keys), so every join here broadcasts — the target is
-        # never shuffled for the probe.
-        batch_keys = winners.select(*key_cols).distinct()
-        cur = (target.join(F.broadcast(batch_keys), on=key_cols,
-                           how="left_semi")
-               .groupBy(*key_cols)
-               .agg(F.max(LSN_COL).alias("_cur_lsn")))
-        effective = (
-            winners.join(F.broadcast(cur), on=key_cols, how="left")
-            .filter(F.col("_cur_lsn").isNull()
-                    | (F.col(lsn_col) > F.col("_cur_lsn")))
-            .drop("_cur_lsn")
-        ).cache()
-        survivors = target.join(
-            F.broadcast(effective.select(*key_cols)), on=key_cols,
-            how="left_anti")
-        fields = (list(snap.schema.fields)
-                  + [T.StructField(BUCKET_COL, T.IntegerType()),
-                     T.StructField(LSN_COL, T.LongType()),
-                     T.StructField(OP_COL, T.StringType())])
-        data_cols = [f.name for f in fields]
-        payload = lambda f: (  # noqa: E731
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in winner_cols
-            else F.lit(None).cast(f.dataType).alias(f.name))
-        # effective D events are written as TOMBSTONE rows (kept in base,
-        # filtered by public reads) so their LSN keeps guarding the key
-        applied = (
-            effective
-            .withColumn(LSN_COL, F.col(lsn_col).cast("long"))
-            .withColumn(OP_COL, F.col(op_col))
-            .select(*[payload(f)
-                      if f.name not in (BUCKET_COL, LSN_COL, OP_COL)
-                      else F.col(f.name) for f in fields])
-        )
-        merged = survivors.select(*data_cols).unionByName(applied)
-
-        def add_rate(adds):
-            elapsed = max(time.monotonic() - t0, 1e-9)
-            lin = dict(props["lineage"])
-            lin["events_per_sec"] = round(m.keys / elapsed, 1)
-            return {"lineage": lin}
-
-        m.version = table.commit_rewrite(
-            merged, target_files, "merge", snap.schema, snap.schema_id, props,
-            props_fn=add_rate)
-        effective.unpersist()
-    finally:
-        winners.unpersist()
-
+    append = dict(properties=props, repartition=False, bucket_pure=False,
+                  bucket_groups=l0_groups, props_fn=lineage_props)
+    if async_finalize:
+        # write job runs inline (the parallel part); footer harvest +
+        # lineage + commit fsync + compaction trigger land on the finalizer
+        # thread, overlapping the caller's next batch. m's
+        # version/lineage/phases fields settle when the commit lands —
+        # callers read them after LakeTable.join_pending_commit().
+        m.extra["async_commit"] = True
+        table.append_deltas(delta, async_finalize=True, post_commit=_post,
+                            **append)
+    else:
+        _post(table.append_deltas(delta, **append))
     m.duration_sec = time.monotonic() - t0
-    # lineage goes into the commit log too (cheap, driver-side JSON)
     return m

@@ -83,7 +83,7 @@ class FileEntry:
     bytes: int
     schema_id: int
     stats: dict[str, list[Any]] = field(default_factory=dict)  # col -> [min, max, nulls]
-    kind: str = "base"             # "base" | "delta" (merge-on-read change file)
+    kind: str = "base"             # "base" | "delta" (L0 change file, resolved at read)
 
     def to_json(self) -> dict[str, Any]:
         return {
@@ -659,7 +659,7 @@ class LakeTable:
         column (Spark's dynamic-partition writer adds a task-local sort, no
         exchange). With G = num_buckets the L0 files are fully bucket-pure
         (labeled with real bucket ids via their footer stats), restoring
-        MOR-grade compaction/read locality; smaller G trades file count
+        per-bucket compaction/read locality; smaller G trades file count
         (tasks x G per write) for locality. ``record_phases=False`` skips the
         telemetry side channel (background maintenance writes must not clobber
         the foreground merge's phase decomposition).
@@ -739,13 +739,22 @@ class LakeTable:
                     .map(lambda fp: _harvest_footer(fp, abs_dir, rel_dir,
                                                     schema_id, kind))
                     .collect())
-            return [FileEntry.from_json(d) for d in docs]
-        # driver thread pool: footer reads release the GIL in pyarrow I/O,
-        # dropping per-commit cost from O(files) serial to ~O(files/16)
-        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
-            return [FileEntry.from_json(d) for d in pool.map(
-                lambda fp: _harvest_footer(fp, abs_dir, rel_dir,
-                                           schema_id, kind), paths)]
+        else:
+            # local thread pool: footer reads release the GIL in pyarrow
+            # I/O, dropping per-commit cost from O(files) serial to
+            # ~O(files/16)
+            with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
+                docs = list(pool.map(
+                    lambda fp: _harvest_footer(fp, abs_dir, rel_dir,
+                                               schema_id, kind), paths))
+        # Spark writes an empty file for an empty first partition; it has no
+        # _bucket stats, so committed it would span (and add read
+        # amplification to) every bucket
+        entries = [FileEntry.from_json(d) for d in docs]
+        for e in entries:
+            if e.rows == 0:
+                os.remove(os.path.join(self.location, e.path))
+        return [e for e in entries if e.rows]
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         if BUCKET_COL in df.columns:
@@ -805,7 +814,7 @@ class LakeTable:
         ``condition`` for manifest-stats file skipping: files that cannot
         match identify buckets that need no rewrite; those buckets' files
         ride through the commit untouched. Pruning is at bucket granularity
-        (not file) because MOR delta resolution is per-bucket: rewriting one
+        (not file) because L0 resolution is per-bucket: rewriting one
         base file while its bucket's deltas survive would re-resolve
         against stale deltas. A may-match raw-append (mixed-bucket) file
         falls back to the full rewrite, same rule as the MERGE path. Without
@@ -894,7 +903,7 @@ class LakeTable:
                       props_fn: Any = None,
                       async_finalize: bool = False,
                       post_commit: Any = None) -> int:
-        """Delta (L0) write path of the raw and mor merge modes: append
+        """Delta (L0) write path of the raw merge mode: append
         LWW-resolvable change files (rows carry BUCKET_COL, LSN_COL,
         OP_COL). O(batch) cost — no target read, no rewrite; reads resolve
         them bucket-locally (:func:`_lww_kernel`) and :meth:`compact_deltas`
@@ -946,7 +955,7 @@ class LakeTable:
                 props.update(props_fn(adds))
             while True:
                 try:
-                    v = self._write_commit(version, "merge_mor", snap.schema,
+                    v = self._write_commit(version, "merge_raw", snap.schema,
                                            snap.schema_id, adds, [], props)
                     break
                 except CommitConflictError:
@@ -982,7 +991,7 @@ class LakeTable:
             v = version
             while True:
                 try:
-                    return self._write_commit(v, "merge_mor", snap.schema,
+                    return self._write_commit(v, "merge_raw", snap.schema,
                                               snap.schema_id, entries, [],
                                               props)
                 except CommitConflictError:
@@ -1044,9 +1053,9 @@ class LakeTable:
         resolution over the compacted base; commit races are retried with
         victim re-validation. NOT safe concurrent with COW rewrites (a COW
         merge derived from a pre-compaction snapshot would duplicate rows) —
-        callers gate this on delta-append modes (mor/raw), which is also why
-        :class:`~..streaming.CdcStreamRunner` joins maintenance before
-        returning. Returns the Future, or None if one was already running."""
+        :meth:`merge_staged` joins maintenance first, and
+        :class:`~..streaming.CdcStreamRunner` joins it before returning.
+        Returns the Future, or None if one was already running."""
         if self._maint_future is not None and not self._maint_future.done():
             return None
         from concurrent.futures import ThreadPoolExecutor
@@ -1169,22 +1178,8 @@ class LakeTable:
             targets = list(buckets)
         if not targets:
             return None
-        victims = snap.files_for_buckets(targets)
-        if any(e.bucket == MIXED_BUCKET for e in victims):
-            targets = self.expand_bucket_closure(snap, targets)
-            victims = snap.files_for_buckets(targets)
-        resolved = self.read(version=snap.version, buckets=targets,
-                             with_bucket=True)
-        props = dict(properties or {})
-        props["compacted_delta_buckets"] = sorted(targets) if targets else "all"
-        # an L0 read is already split by bucket range, one task per range:
-        # writing it as-is gives one file per bucket with no exchange
-        l0 = any(e.kind == "delta" for e in victims)
-        return self.commit_rewrite(resolved, victims, "compact_deltas",
-                                   snap.schema, snap.schema_id, props,
-                                   repartition=not l0,
-                                   record_phases=record_phases,
-                                   retry_conflicts=True)
+        return self._fold(snap, targets, "compact_deltas", properties,
+                          record_phases=record_phases, retry_conflicts=True)
 
     def evolve_schema(self, new_schema: T.StructType,
                       properties: dict[str, Any] | None = None) -> int:
@@ -1214,29 +1209,121 @@ class LakeTable:
         frag = [b for b, c in counts.items() if c >= min_files_per_bucket]
         if not frag:
             return None
-        targets = self.expand_bucket_closure(snap, frag)
+        return self._fold(snap, frag, "compact", properties)
+
+    def _fold(self, snap: Snapshot, buckets: Iterable[int], action: str,
+              properties: dict[str, Any] | None = None,
+              staged: list[FileEntry] = (), props_fn: Any = None,
+              record_phases: bool = True,
+              retry_conflicts: bool = False) -> int:
+        """The one fold behind :meth:`compact`, :meth:`compact_deltas` and
+        :meth:`merge_staged`: widen ``buckets`` to their closure
+        (:meth:`expand_bucket_closure`), resolve the closure's files of
+        ``snap`` plus any ``staged`` (uncommitted L0) entries as
+        :meth:`read` would — bucket-locally by :func:`_lww_kernel` when L0
+        is present (the kernel's output is already split by bucket range,
+        so it is written with no exchange), a plain scan otherwise — and
+        swap those files for the result in one :meth:`commit_rewrite`.
+
+        Row conservation: the rows harvested from the written files must
+        equal the rows the write job produced, counted by an Observation on
+        the same job. A mismatch (output files lost before the harvest)
+        raises instead of committing. ``props_fn(adds, victims) -> dict``
+        adds lineage to the same commit."""
+        from pyspark.sql import Observation
+
+        targets = self.expand_bucket_closure(snap, buckets)
         victims = snap.files_for_buckets(targets)
-        df = self.read(buckets=targets, with_bucket=True)
+        entries = victims + list(staged)
+        l0 = any(e.kind == "delta" for e in entries)
+        df = (self._read_lww(snap, entries, targets, with_bucket=True) if l0
+              else self._scan(snap, entries))
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+
+        def conserve(adds: list[FileEntry]) -> dict[str, Any]:
+            wrote, got = obs.get["rows"], sum(e.rows for e in adds)
+            if got != wrote:
+                raise RuntimeError(
+                    f"{action}: the write job wrote {wrote} rows but "
+                    f"{got} were harvested; not committing")
+            return props_fn(adds, victims) if props_fn is not None else {}
+
         props = dict(properties or {})
-        props["compacted_buckets"] = targets if targets is not None else "all"
-        return self.commit_rewrite(df, victims, "compact", snap.schema,
-                                   snap.schema_id, props)
+        props["folded_buckets"] = targets if targets is not None else "all"
+        return self.commit_rewrite(df, victims, action, snap.schema,
+                                   snap.schema_id, props, repartition=not l0,
+                                   props_fn=conserve,
+                                   record_phases=record_phases,
+                                   retry_conflicts=retry_conflicts)
+
+    def merge_staged(self, delta: DataFrame,
+                     properties: dict[str, Any] | None = None,
+                     props_fn: Any = None) -> int:
+        """Copy-on-write apply of one batch of delta rows (carrying
+        BUCKET_COL, LSN_COL and OP_COL): stage them as bucket-pure L0 files
+        that no commit references (no shuffle — a task-local split per
+        bucket), fold the closure of the buckets they touch over the
+        table's files plus the staged ones (:meth:`_fold`), and commit the
+        result as ONE rewrite. The staged directory is deleted whether or
+        not the fold commits. ``props_fn(staged, victims) -> dict`` lands
+        lineage in that commit."""
+        import shutil
+
+        self.join_pending_commit()
+        # a background fold committing first would make this rewrite's
+        # snapshot stale (a commit conflict); let it land
+        self.join_maintenance()
+        snap = self.snapshot()
+        abs_dir, rel_dir, _ = self._run_write_job(
+            delta, snap.version + 1, snap.schema, kind="delta",
+            repartition=False, bucket_pure=False,
+            bucket_groups=self.num_buckets)
+        try:
+            staged = self._harvest_entries(abs_dir, rel_dir, snap.schema_id,
+                                           "delta")
+            return self._fold(
+                snap, self.buckets_of_entries(staged), "merge", properties,
+                staged=staged,
+                props_fn=None if props_fn is None
+                else lambda adds, victims: props_fn(staged, victims))
+        finally:
+            shutil.rmtree(abs_dir, ignore_errors=True)
+
+    # an unreferenced file younger than this may be the output of a write
+    # whose commit has not landed yet (a fold, a staged copy-on-write batch,
+    # another process's append), so vacuum keeps it
+    VACUUM_GRACE_SEC = 3600.0
 
     def vacuum(self, keep_versions: int = 2) -> int:
         """Physically delete data files not referenced by the newest
-        ``keep_versions`` snapshots. Returns #files removed."""
+        ``keep_versions`` snapshots. A file some commit removed is deleted
+        at once; a file no commit ever removed is deleted only once it is
+        older than ``VACUUM_GRACE_SEC`` — until its commit lands an in-flight
+        write's output is referenced by nothing. A pending async commit and
+        background maintenance are joined first. Returns #files removed."""
         self.join_pending_commit()
+        self.join_maintenance()
         vs = self._commit_versions()
         keep = set()
         for v in vs[-keep_versions:]:
             keep.update(self.snapshot(v).files.keys())
+        dead = set()
+        for v in vs:
+            dead.update(self._read_doc(v)["removes"])
+        cutoff = time.time() - self.VACUUM_GRACE_SEC
         removed = 0
         for fp in glob.glob(os.path.join(self.location, _DATA_DIR, "**", "*.parquet"),
                             recursive=True):
             rel = os.path.relpath(fp, self.location)
-            if rel not in keep:
-                os.remove(fp)
-                removed += 1
+            if rel in keep:
+                continue
+            try:
+                if rel in dead or os.path.getmtime(fp) < cutoff:
+                    os.remove(fp)
+                    removed += 1
+            except FileNotFoundError:     # a staged directory cleaned up
+                pass
         return removed
 
 

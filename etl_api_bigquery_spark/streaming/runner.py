@@ -56,14 +56,11 @@ class CdcStreamRunner:
     target_events_per_sec: float | None = None
     _rate_t0: float | None = field(default=None, repr=False)
     _rate_events: int = field(default=0, repr=False)
-    salt_buckets: int = 0
-    # write strategy: "raw" (default — LSM append, zero full-row shuffle,
-    # bucket-clustered L0, the high-throughput ingest mode) | "mor" | "cow"
+    # write strategy: "raw" (default — L0 append, zero full-row shuffle,
+    # bucket-clustered L0, the high-throughput ingest mode) | "cow" (the
+    # same append folded into the touched buckets in the batch's commit)
     mode: str = "raw"
-    prefilter: bool | None = None          # None = merge_cdc_batch default
-    # "broadcast" (exact winner-token semi-join) | "bloom" (distributed
-    # bloom build, no driver-serial relation build — see lww_prefilter)
-    prefilter_strategy: str = "broadcast"
+    prefilter: bool = False                # see merge_cdc_batch
     auto_compact_deltas: int = 16
     # raw L0 clustering: None = adaptive ("auto" — per-batch group count from
     # source bytes and a 16 MB L0 file-size floor, bucket-pure when per-task
@@ -81,11 +78,12 @@ class CdcStreamRunner:
     # batch's checkpoint commit and its table commit leaves a fence <
     # checkpoint gap. The default is ON because run_available_now() closes
     # that window automatically — it calls repair_fence_gap() before
-    # starting the stream, re-applying any checkpoint-committed batch the
-    # table fence never saw from the file source's own checkpoint log (the
-    # feed is replayable by construction). Measured at the local[32]
-    # 1M-event operating point: +7-10% steady throughput (BENCH/BASELINE.md
-    # round 5). Set False for a strictly synchronous commit per batch.
+    # starting the stream, whatever this flag is set to, re-applying any
+    # checkpoint-committed batch the table fence never saw from the file
+    # source's own checkpoint log (the feed is replayable by construction).
+    # Measured at the local[32] 1M-event operating point: +7-10% steady
+    # throughput (BENCH/BASELINE.md round 5). Set False for a strictly
+    # synchronous commit per batch.
     async_commit: bool = True
     transform: Callable[[DataFrame], DataFrame] | None = None
     # optional stateful pre-filter (applyInPandasWithState): drops events
@@ -100,6 +98,9 @@ class CdcStreamRunner:
     # commitOffsets / triggerExecution) — the measured cost of the streaming
     # wrapper vs the merge core, used by the scaling-evidence reports
     progress: list[dict[str, Any]] = field(default_factory=list)
+    # batches the last run_available_now re-applied from the checkpoint
+    # (see repair_fence_gap); they are in ``metrics`` too
+    repaired: list[MergeMetrics] = field(default_factory=list)
     fail_after_batches: int | None = None  # test hook: crash mid-stream
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -107,6 +108,21 @@ class CdcStreamRunner:
                 [m for m in self.metrics if not m.skipped_fence]
         ) >= self.fail_after_batches:
             raise RuntimeError("injected failure (test hook)")
+        m = self._merge(batch_df, batch_id, compact_async=self.async_compact,
+                        async_finalize=self.async_commit
+                        and self.mode == "raw")
+        if self.target_events_per_sec is not None:
+            # pacing reads the batch's event counts, which settle only when
+            # an async commit lands — join first (the pace sleep would have
+            # covered the finalize anyway)
+            self.table.join_pending_commit()
+            self._pace(m)
+
+    def _merge(self, batch_df: DataFrame, batch_id: int,
+               compact_async: bool,
+               async_finalize: bool = False) -> MergeMetrics:
+        """The sink: one :func:`merge_cdc_batch` call with this runner's
+        settings, shared by the stream and :meth:`repair_fence_gap`."""
         if self.transform is not None:
             batch_df = self.transform(batch_df)
         groups = self.l0_groups
@@ -114,20 +130,11 @@ class CdcStreamRunner:
             groups = "auto"                       # file-size-floor adaptive
         m = merge_cdc_batch(
             self.table, batch_df, batch_id=batch_id, txn_app=self.txn_app,
-            salt_buckets=self.salt_buckets, mode=self.mode,
-            auto_compact_deltas=self.auto_compact_deltas,
-            prefilter=self.prefilter,
-            prefilter_strategy=self.prefilter_strategy, l0_groups=groups,
-            compact_async=self.async_compact and self.mode != "cow",
-            async_finalize=self.async_commit and self.mode == "raw",
-        )
+            mode=self.mode, auto_compact_deltas=self.auto_compact_deltas,
+            prefilter=self.prefilter, l0_groups=groups,
+            compact_async=compact_async, async_finalize=async_finalize)
         self.metrics.append(m)
-        if self.target_events_per_sec is not None:
-            # pacing reads the batch's event counts, which settle only when
-            # an async commit lands — join first (the pace sleep would have
-            # covered the finalize anyway)
-            self.table.join_pending_commit()
-            self._pace(m)
+        return m
 
     def _pace(self, m: MergeMetrics) -> None:
         """Token-bucket pacing: sleep so cumulative events / elapsed wall
@@ -168,10 +175,11 @@ class CdcStreamRunner:
             reader = reader.option("maxFilesPerTrigger",
                                    self.max_files_per_trigger)
         stream = reader.parquet(self.feed_dir)
-        if self.async_commit and self.mode == "raw":
-            # close any fence-vs-checkpoint gap a crash inside the async
-            # commit window left behind (no-op on a healthy checkpoint)
-            self.repair_fence_gap()
+        # close any fence-vs-checkpoint gap a crash inside an async commit
+        # window left behind — whatever async_commit is set to now, since
+        # the run that crashed may have had it on (no-op on a healthy or
+        # missing checkpoint)
+        self.repaired = self.repair_fence_gap()
         if self.stateful_staleness_filter:
             from .stateful import lww_staleness_filter
             stream = lww_staleness_filter(stream, self.table.key_cols)
@@ -213,7 +221,7 @@ class CdcStreamRunner:
 
     # ------------------------------------------------------------ recovery
 
-    def repair_fence_gap(self, timeout_sec: int = 600) -> list[MergeMetrics]:
+    def repair_fence_gap(self) -> list[MergeMetrics]:
         """Close the async-commit crash window: re-apply any batch the
         streaming checkpoint committed but the table fence never saw.
 
@@ -222,13 +230,15 @@ class CdcStreamRunner:
         that window loses the batch from the table while Spark considers it
         done and will never re-deliver it. The file source is replayable,
         though: the checkpoint's ``sources/0`` log records exactly which
-        feed files each batch admitted. On restart, call this BEFORE
-        :meth:`run_available_now` — it compares the table fence
+        feed files each batch admitted. :meth:`run_available_now` calls
+        this before it starts the stream: it compares the table fence
         (``last_txn``) with the checkpoint's committed batches and replays
         each missing batch's file list through the same
         :func:`merge_cdc_batch` sink (sync commits). The fence makes it
         idempotent: batches that did land are skipped by the fence check,
-        so calling this on a healthy checkpoint is a no-op.
+        so calling this on a healthy checkpoint is a no-op. A batch whose
+        source log entry is gone raises (see :meth:`_source_log_files`)
+        rather than being skipped as empty.
         """
         import glob as _glob
         out: list[MergeMetrics] = []
@@ -246,21 +256,7 @@ class CdcStreamRunner:
             if not files:  # empty batch (possible with availableNow tails)
                 continue
             batch_df = self.spark.read.schema(feed_schema()).parquet(*files)
-            if self.transform is not None:
-                batch_df = self.transform(batch_df)
-            groups = self.l0_groups
-            if groups is None and self.mode == "raw":
-                groups = "auto"
-            m = merge_cdc_batch(
-                self.table, batch_df, batch_id=b, txn_app=self.txn_app,
-                salt_buckets=self.salt_buckets, mode=self.mode,
-                auto_compact_deltas=self.auto_compact_deltas,
-                prefilter=self.prefilter,
-                prefilter_strategy=self.prefilter_strategy, l0_groups=groups,
-                compact_async=False,
-            )
-            out.append(m)
-            self.metrics.append(m)
+            out.append(self._merge(batch_df, b, compact_async=False))
         self.table.join_maintenance()
         return out
 
@@ -269,7 +265,12 @@ class CdcStreamRunner:
         checkpoint's FileStreamSource metadata log (``sources/0/<batch>`` —
         JSON lines of ``{path, timestamp, batchId}``; compacted log files
         carry every entry with its original batchId, so filtering on
-        batchId works for both plain and ``.compact`` log files)."""
+        batchId works for both plain and ``.compact`` log files).
+
+        The candidate is the log file with the smallest version >= batch_id.
+        A plain one must be the batch's own file: a later plain file means
+        the batch's entry was purged, and reading it would make a lost
+        batch look empty, so that raises."""
         sdir = os.path.join(self.checkpoint_dir, "sources", "0")
         cand = None
         best = None
@@ -280,7 +281,8 @@ class CdcStreamRunner:
             v = int(stem)
             if v >= batch_id and (best is None or v < best):
                 best, cand = v, os.path.join(sdir, f)
-        if cand is None:
+        if cand is None or (not cand.endswith(".compact")
+                            and best != batch_id):
             raise FileNotFoundError(
                 f"no source log entry covers batch {batch_id} in {sdir}")
         files: list[str] = []

@@ -9,7 +9,7 @@ replayed batches, so rerunning after any crash converges to the same state.
 
 Example (sandbox):
     python jobs/ingest.py --generate 100000 --table-dir /tmp/ingest/t \\
-        --feed-dir /tmp/ingest/feed --checkpoint /tmp/ingest/ckpt --mode mor
+        --feed-dir /tmp/ingest/feed --checkpoint /tmp/ingest/ckpt --mode raw
 """
 
 from __future__ import annotations
@@ -23,19 +23,21 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--feed-dir", required=True)
     ap.add_argument("--table-dir", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--mode", choices=["cow", "mor", "raw"], default="mor")
+    ap.add_argument("--mode", choices=["raw", "cow"], default="raw",
+                    help="raw: commit each batch as L0 files, resolved at "
+                         "read; cow: fold them into the touched buckets in "
+                         "the batch's commit")
     ap.add_argument("--num-buckets", type=int, default=64)
-    ap.add_argument("--salt-buckets", type=int, default=8)
-    ap.add_argument("--prefilter", choices=["default", "on", "off", "bloom"],
-                    default="default",
-                    help="LWW winner prefilter: on/off, or 'bloom' for the "
-                         "distributed bloom strategy (no driver-serial "
-                         "broadcast build)")
+    ap.add_argument("--prefilter", action=argparse.BooleanOptionalAction,
+                    default=False,
+                    help="drop losing events before the write with the "
+                         "broadcast LWW winner prefilter (default off: L0 "
+                         "keeps the full event history)")
     ap.add_argument("--stateful-filter", action="store_true",
                     help="stateful LWW staleness pre-filter "
                          "(applyInPandasWithState) before the MERGE sink")
@@ -45,14 +47,15 @@ def main() -> None:
                     help="pipeline each batch's commit finalization with the "
                          "next trigger (raw mode; see CdcStreamRunner."
                          "async_commit; default on). On startup, any "
-                         "fence-vs-checkpoint gap a crash in the async "
-                         "window left behind is repaired first")
+                         "fence-vs-checkpoint gap a crash in an async "
+                         "window left behind is repaired first, whatever "
+                         "this flag is set to")
     ap.add_argument("--txn-app", default="cdc-ingest")
     ap.add_argument("--generate", type=int, default=0,
                     help="generate N synthetic events into --feed-dir first")
     ap.add_argument("--verify", action="store_true",
                     help="assert sha256 replay match after draining")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from pyspark.sql import types as T
 
@@ -82,23 +85,18 @@ def main() -> None:
     runner = CdcStreamRunner(
         spark, table, args.feed_dir, args.checkpoint, txn_app=args.txn_app,
         max_files_per_trigger=args.max_files_per_trigger,
-        salt_buckets=args.salt_buckets, mode=args.mode,
-        prefilter={"on": True, "off": False, "bloom": True,
-                   "default": None}[args.prefilter],
-        prefilter_strategy=("bloom" if args.prefilter == "bloom"
-                            else "broadcast"),
+        mode=args.mode, prefilter=args.prefilter,
         stateful_staleness_filter=args.stateful_filter,
         async_commit=args.async_commit)
     t0 = time.monotonic()
-    repaired = (runner.repair_fence_gap() if args.async_commit
-                and args.mode == "raw"
-                and os.path.exists(args.checkpoint) else [])
+    # run_available_now repairs any fence gap first; repaired batches are
+    # in its metrics once and are also reported on their own
     metrics = runner.run_available_now()
     dt = time.monotonic() - t0
     applied = [m for m in metrics if not m.skipped_fence]
     events = sum(m.keys for m in applied)
 
-    result = {"batches": len(applied), "repaired": len(repaired),
+    result = {"batches": len(applied), "repaired": len(runner.repaired),
               "keys_applied": events,
               "duration_sec": round(dt, 2), "table_version": table.current_version(),
               "rows": table.snapshot().num_rows}
@@ -109,6 +107,7 @@ def main() -> None:
         result["replay_match"] = assert_replay_match(
             table.read(), expected_final_state(feed_df))
     print(json.dumps(result))
+    return result
 
 
 if __name__ == "__main__":

@@ -96,7 +96,7 @@ def main() -> None:
                                      num_buckets=ev2.NUM_BUCKETS)
             runner = CdcStreamRunner(
                 spark, table, ev2.FEED_DIR, f"{WORK}/ckpt", txn_app="audit",
-                salt_buckets=8, mode="raw", prefilter=True, l0_groups="auto",
+                mode="raw", prefilter=True, l0_groups="auto",
                 auto_compact_deltas=10 ** 9, async_commit=use_async,
                 max_files_per_trigger=ev2.FILES_PER_EPOCH)
             runner.run_available_now(timeout_sec=1800)

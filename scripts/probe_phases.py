@@ -57,7 +57,7 @@ def main() -> None:
         t0 = time.monotonic()
         evb = batch.withColumn(BUCKET_COL, table.bucket_expr())
         evb = evb.repartition(table.num_buckets, F.col(BUCKET_COL))
-        winners = lww_dedup(evb, [BUCKET_COL, "repo", "path"], "lsn", 8)
+        winners = lww_dedup(evb, [BUCKET_COL, "repo", "path"], "lsn")
         obs = Observation()
         observed = winners.observe(obs, F.count(F.lit(1)).alias("keys"))
         snap = table.snapshot()

@@ -128,7 +128,7 @@ def test_stats_file_skipping(spark, tmp_table_dir):
     b = spark.createDataFrame([(1, 0, "U", "rz", "pz", "x", 5000)],
                               ["lsn", "epoch", "op", "repo", "path",
                                "content", "seq"])
-    merge_cdc_batch(t, b, 0, "sp", mode="mor")
+    merge_cdc_batch(t, b, 0, "sp", mode="raw")
     with pytest.raises(ValueError):
         t.read(skip_predicates=[("seq", "=", 5000)])
 
@@ -272,7 +272,7 @@ def test_checkpointed_table_state_matches_after_merges(spark, tmp_table_dir,
     feed = change_feed(spark, n_events=6000, n_keys=200, n_epochs=3).cache()
     for e in range(3):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "ckm",
-                        mode="mor", auto_compact_deltas=2)
+                        mode="raw", auto_compact_deltas=2)
     assert t._checkpoint_versions()
     cold = LakeTable.load(spark, t.location)
     assert cold.snapshot().files == t.snapshot().files
@@ -428,3 +428,79 @@ def test_join_pending_commit_keeps_newer_future(spark, tmp_table_dir):
     waiter.join(10)
     assert not waiter.is_alive()
     assert t._commit_future is second
+
+
+def test_vacuum_waits_for_inflight_fold(spark, tmp_table_dir, monkeypatch):
+    """vacuum(keep_versions=1) while compact_deltas_async is between its
+    write job and its commit: the fold's output is referenced by no commit
+    yet. Vacuum must wait for the fold, not delete its files (which made
+    the fold commit 0 adds over its victims and emptied the table)."""
+    import threading
+    import time
+
+    from etl_api_bigquery_spark.cdc import expected_final_state
+    from etl_api_bigquery_spark.cdc.oracle import assert_replay_match
+    t, feed = _raw_table(spark, tmp_table_dir, buckets=4)
+    expected = expected_final_state(feed)
+    written, vacuuming = threading.Event(), threading.Event()
+    harvest, vacuum = LakeTable._harvest_entries, LakeTable.vacuum
+
+    def gated_harvest(self, *a, **k):
+        if threading.current_thread().name.startswith("lake-maint"):
+            written.set()
+            assert vacuuming.wait(60)
+            time.sleep(1.0)        # a vacuum that does not wait is done
+        return harvest(self, *a, **k)
+
+    def flagged_vacuum(self, *a, **k):
+        vacuuming.set()
+        return vacuum(self, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "_harvest_entries", gated_harvest)
+    monkeypatch.setattr(LakeTable, "vacuum", flagged_vacuum)
+    assert t.compact_deltas_async(range(4)) is not None
+    assert written.wait(120)
+    t.vacuum(keep_versions=1)
+    t.join_maintenance()
+    assert any(h["action"] == "compact_deltas" for h in t.history())
+    assert_replay_match(t.read(), expected)
+    feed.unpersist()
+
+
+def test_vacuum_keeps_young_unreferenced_files(spark, tmp_table_dir):
+    """A file no commit references or removed may be an in-flight write's
+    output (another process's, a staged cow batch): vacuum deletes it only
+    past the grace window."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    t = make_table(spark, tmp_table_dir)
+    t.append(rows_df(spark, 20))
+    d = os.path.join(t.location, "data", "c-inflight")
+    os.makedirs(d)
+    orphan = os.path.join(d, "part-0.parquet")
+    pq.write_table(pa.table({"x": [1]}), orphan)
+    assert t.vacuum(keep_versions=1) == 0 and os.path.exists(orphan)
+    old = time.time() - t.VACUUM_GRACE_SEC - 60
+    os.utime(orphan, (old, old))
+    assert t.vacuum(keep_versions=1) == 1 and not os.path.exists(orphan)
+    assert t.read().count() == 20
+
+
+def test_fold_row_conservation_blocks_commit(spark, tmp_table_dir,
+                                             monkeypatch):
+    """A fold whose harvest misses rows its write job wrote raises instead
+    of committing: no commit lands and the table is unchanged."""
+    t, feed = _raw_table(spark, tmp_table_dir, buckets=4)
+    v0 = t.current_version()
+    before = t.read().count()
+    harvest = LakeTable._harvest_entries
+    monkeypatch.setattr(LakeTable, "_harvest_entries",
+                        lambda self, *a, **k: harvest(self, *a, **k)[1:])
+    with pytest.raises(RuntimeError, match="not committing"):
+        t.compact_deltas(buckets=[0])
+    assert t.current_version() == v0
+    monkeypatch.undo()
+    assert t.read().count() == before
+    feed.unpersist()

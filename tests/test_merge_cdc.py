@@ -1,10 +1,10 @@
 """MERGE-apply semantics: LWW, deletes, delete-then-reinsert, duplicate-LSN
 redelivery, NULL keys, fence idempotence, schema evolution mid-stream,
-salted dedup equivalence, full replay sha256 match.
+full replay sha256 match, lineage.
 
-The semantic tests are parameterized over both write strategies — COW
-(rewrite touched buckets) and MOR (append delta files, resolve at read) —
-which must be read-indistinguishable."""
+The semantic tests are parameterized over both write modes — cow (fold the
+batch into the touched buckets) and raw (append L0 files, resolve at
+read) — which must be read-indistinguishable."""
 
 import os
 
@@ -12,12 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MODES = ["cow", "mor", "raw"]
+MODES = ["cow", "raw"]
 
 from etl_api_bigquery_spark.cdc import change_feed, expected_final_state
 from etl_api_bigquery_spark.cdc.oracle import assert_replay_match
 from etl_api_bigquery_spark.lake import LakeTable
-from etl_api_bigquery_spark.lake.merge import lww_dedup, merge_cdc_batch
+from etl_api_bigquery_spark.lake.merge import merge_cdc_batch
 
 SILVER = T.StructType([
     T.StructField("repo", T.StringType()),
@@ -188,13 +188,6 @@ def test_expire_tombstones(spark, tmp_table_dir):
     assert t.read().count() == 1  # live data untouched
 
 
-def test_salted_dedup_equivalence(spark):
-    feed = change_feed(spark, n_events=5000, n_keys=200, n_epochs=3)
-    a = lww_dedup(feed, ["repo", "path"], salt_buckets=0)
-    b = lww_dedup(feed, ["repo", "path"], salt_buckets=8)
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
 @pytest.mark.parametrize("mode", MODES)
 def test_full_replay_sha256_match(spark, tmp_table_dir, mode):
     """The BASELINE.json invariant end-to-end at small scale."""
@@ -202,7 +195,7 @@ def test_full_replay_sha256_match(spark, tmp_table_dir, mode):
     feed = change_feed(spark, n_events=20000, n_keys=800, n_epochs=4).cache()
     for e in range(4):
         merge_cdc_batch(t, feed.filter(F.col("epoch") == e), e, "replay",
-                        salt_buckets=4, mode=mode)
+                        mode=mode)
     res = assert_replay_match(t.read(), expected_final_state(feed))
     assert res["sha_mismatch"] == 0 and res["missing"] == 0 and res["extra"] == 0
     feed.unpersist()
@@ -312,7 +305,7 @@ def test_runner_max_bytes_per_trigger(spark, tmp_table_dir):
     t = make_table(spark, tmp_table_dir)
     runner = CdcStreamRunner(
         spark, t, feed_dir, os.path.join(tmp_table_dir, "ck"),
-        txn_app="thr", mode="mor",
+        txn_app="thr", mode="raw",
         max_bytes_per_trigger=1,  # 1 byte bound -> 1 file per trigger
     )
     runner.run_available_now()
@@ -325,8 +318,79 @@ def test_lineage_events_per_sec(spark, tmp_table_dir):
     from etl_api_bigquery_spark.meta.lineage import lineage_df
     t = make_table(spark, tmp_table_dir)
     merge_cdc_batch(t, events_df(spark, [evt(1, "I", "r1", "a", "v1")]),
-                    0, "x", mode="mor")
+                    0, "x", mode="raw")
     merge_cdc_batch(t, events_df(spark, [evt(2, "U", "r1", "a", "v2")]),
                     1, "x", mode="cow")
     lin = lineage_df(spark, t).filter("events_per_sec IS NOT NULL").collect()
     assert len(lin) == 2 and all(r.events_per_sec > 0 for r in lin)
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_prefilter_merge_matches_oracle(spark, tmp_table_dir, mode):
+    """prefilter=True drops losing events before the write; the state still
+    matches the batch oracle in both modes."""
+    feed = change_feed(spark, n_events=30_000, n_keys=3_000, n_epochs=3,
+                       seed=7)
+    t = make_table(spark, tmp_table_dir)
+    for e in range(3):
+        merge_cdc_batch(t, feed.filter(F.col("epoch") == e), batch_id=e,
+                        mode=mode, prefilter=True)
+    assert_replay_match(t.read(), expected_final_state(feed))
+
+
+def test_prefilter_drops_null_lsn(spark):
+    """The envelope contract: NULL-lsn events never match a winner token."""
+    from etl_api_bigquery_spark.lake.merge import lww_prefilter
+    ev = events_df(spark, [(None, 0, "U", "r1", "p1", "c", "py", "x"),
+                           (5, 0, "U", "r1", "p1", "c", "py", "y")])
+    got = lww_prefilter(ev, ["repo", "path"], "lsn").collect()
+    assert len(got) == 1 and got[0]["lsn"] == 5
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_lineage_skew_factor_on_skewed_feed(spark, tmp_table_dir, mode):
+    """skew_factor is max / mean rows per touched bucket of the batch's
+    harvested files: a hot key's flood puts its bucket far above the mean
+    (raw writes bucket-pure L0 here, as cow always stages it)."""
+    t = make_table(spark, tmp_table_dir)
+    rows = ([evt(i, "U", "hot", "k", f"v{i}") for i in range(200)]
+            + [evt(1000 + i, "I", f"r{i}", f"p{i}", "x") for i in range(40)])
+    m = merge_cdc_batch(t, events_df(spark, rows), 0, "skew", mode=mode,
+                        l0_groups=4)
+    assert m.skew_factor > 1
+    assert m.keys == 240 and m.buckets_touched > 1
+    lin = t.history()[-1]["properties"]["lineage"]
+    assert lin["skew_factor"] == m.skew_factor
+
+
+def test_cow_lands_one_commit_and_leaves_no_staged_files(spark, tmp_table_dir,
+                                                          monkeypatch):
+    """A cow batch is ONE commit carrying its fence; its staged L0 files are
+    gone afterwards — and also when the fold raises, which lands nothing."""
+    from etl_api_bigquery_spark.lake.table import LakeTable as LT
+    t = make_table(spark, tmp_table_dir)
+    feed = change_feed(spark, n_events=4000, n_keys=150, n_epochs=2).cache()
+    staged = []
+    run_job = LT._run_write_job
+
+    def record(self, df, *a, **k):
+        out = run_job(self, df, *a, **k)
+        if k.get("kind") == "delta":
+            staged.append(out[0])
+        return out
+    monkeypatch.setattr(LT, "_run_write_job", record)
+    v0 = t.current_version()
+    merge_cdc_batch(t, feed.filter("epoch = 0"), 0, "one")
+    new = [h for h in t.history() if h["version"] > v0]
+    assert len(new) == 1 and new[0]["properties"]["txn_batch"] == 0
+    assert staged and not any(os.path.exists(d) for d in staged)
+
+    harvest = LT._harvest_entries
+    monkeypatch.setattr(LT, "_harvest_entries",
+                        lambda self, *a, **k: harvest(self, *a, **k)[1:])
+    v1 = t.current_version()
+    with pytest.raises(RuntimeError, match="not committing"):
+        merge_cdc_batch(t, feed.filter("epoch = 1"), 1, "one")
+    assert t.current_version() == v1 and t.last_txn("one") == 0
+    assert len(staged) == 2 and not any(os.path.exists(d) for d in staged)
+    feed.unpersist()

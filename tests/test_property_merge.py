@@ -1,6 +1,6 @@
 """Property-based testing (hypothesis): for ANY sequence of I/U/D envelopes
 over a small key space, split arbitrarily into micro-batches, the engine's
-final state equals the pure LWW oracle — in both COW and MOR modes.
+final state equals the pure LWW oracle — in both cow and raw modes.
 
 This generalizes the hand-written semantic tests to adversarial orderings
 (interleaved deletes, re-inserts, duplicate LSNs across batch boundaries)."""
@@ -52,7 +52,7 @@ def prop_spark(spark):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(seq=events_strategy, n_batches=splits_strategy,
        dup=st.booleans())
-@pytest.mark.parametrize("mode", ["cow", "mor", "raw"])
+@pytest.mark.parametrize("mode", ["cow", "raw"])
 def test_any_sequence_matches_oracle(spark, tmp_path_factory, seq, n_batches,
                                      dup, mode):
     rows = []

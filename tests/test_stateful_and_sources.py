@@ -118,9 +118,9 @@ def test_lineage_df(spark, tmp_table_dir):
                          key_cols=["repo", "path"], num_buckets=2)
     b = spark.createDataFrame([(1, 0, "I", "r", "p", "v")],
                               ["lsn", "epoch", "op", "repo", "path", "content"])
-    merge_cdc_batch(t, b, 0, "lin-app", mode="mor")
+    merge_cdc_batch(t, b, 0, "lin-app", mode="raw")
     lin = lineage_df(spark, t)
-    rows = [r for r in lin.collect() if r.action == "merge_mor"]
+    rows = [r for r in lin.collect() if r.action == "merge_raw"]
     assert len(rows) == 1
     assert rows[0].keys == 1 and rows[0].txn_app == "lin-app"
     assert rows[0].skew_factor is not None
@@ -162,3 +162,31 @@ def test_source_log_files_plain_and_compact(spark, tmp_path):
     assert r._source_log_files(2) == ["/feed/d.parquet"]
     with pytest.raises(FileNotFoundError):
         r._source_log_files(3)
+
+
+def test_source_log_files_rejects_later_plain_file(spark, tmp_path):
+    """A batch whose plain source log entry is gone must not read as empty:
+    the nearest later plain file belongs to another batch, so the lookup
+    raises instead of returning no files."""
+    import json
+    import os
+
+    from etl_api_bigquery_spark.lake import LakeTable
+    from etl_api_bigquery_spark.streaming import CdcStreamRunner
+    from pyspark.sql import types as T
+
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    sdir = os.path.join(ckpt, "sources", "0")
+    os.makedirs(sdir)
+    with open(os.path.join(sdir, "3"), "w") as fh:   # batch 2's file purged
+        fh.write("v1\n")
+        fh.write(json.dumps({"path": "file:///feed/e.parquet",
+                             "timestamp": 1, "batchId": 3}) + "\n")
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in
+                           ("repo", "path", "content")])
+    table = LakeTable.create(spark, os.path.join(str(tmp_path), "t"), schema,
+                             key_cols=["repo", "path"], num_buckets=2)
+    r = CdcStreamRunner(spark, table, "/feed", ckpt, txn_app="x")
+    assert r._source_log_files(3) == ["/feed/e.parquet"]
+    with pytest.raises(FileNotFoundError):
+        r._source_log_files(2)

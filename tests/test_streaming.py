@@ -85,12 +85,12 @@ def test_stateful_staleness_filter_preserves_state(spark, staged):
     the per-key state store."""
     feed, feed_dir, table, ckpt = staged
     r = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="sf1",
-                        mode="mor", stateful_staleness_filter=True)
+                        mode="raw", stateful_staleness_filter=True)
     r.run_available_now()
     assert_replay_match(table.read(), expected_final_state(feed))
     # second drain on the same checkpoint: nothing new, state intact
     r2 = CdcStreamRunner(spark, table, feed_dir, ckpt, txn_app="sf1",
-                         mode="mor", stateful_staleness_filter=True)
+                         mode="raw", stateful_staleness_filter=True)
     m2 = r2.run_available_now()
     assert all(m.skipped_fence or m.keys == 0 for m in m2)
     assert_replay_match(table.read(), expected_final_state(feed))
